@@ -1820,7 +1820,8 @@ class Gateway(root: SparkSession) {
 
   /** Streaming SELECT (the notebook's continuous-query path,
     * notebookController.ts:219-294): run the query into the drop-oldest ring
-    * buffer via foreachBatch and page it by token. */
+    * buffer via foreachBatch, one job per micro-batch, and page it by token.
+    * A micro-batch larger than the buffer keeps its first `capacity` rows. */
   private val identityTransform: DataFrame => DataFrame = df => df
 
   private def startStreamingSelect(spark: SparkSession, df: DataFrame,
@@ -1833,9 +1834,20 @@ class Gateway(root: SparkSession) {
     // frame of the stream's schema (the transform may add/rename columns)
     val cols = batchTransform(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)).columns.toSeq
+    val cap = buffer.capacity
     def start(mode: String) = df.writeStream.outputMode(mode)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        buffer.append(batchTransform(batch).limit(buffer.capacity).collect().toSeq)
+        // one job over every partition: each task drains its iterator to the
+        // end (a stateful partition commits its state store only then, and
+        // Spark fails the batch unless every partition committed) and ships
+        // at most `cap` rows; the driver keeps the first `cap` in partition
+        // order, the rows `limit(cap).collect()` would return
+        val parts = spark.sparkContext.runJob(batchTransform(batch).rdd, (it: Iterator[Row]) => {
+          val kept = new ArrayBuffer[Row]
+          it.foreach(r => if (kept.length < cap) kept += r)
+          kept.toArray
+        })
+        buffer.append(parts.iterator.flatMap(_.iterator).take(cap).toSeq)
       }
       .queryName(name).start()
     // changelog semantics: projections stream in append mode; aggregations

@@ -155,8 +155,11 @@ object AsOfJoin {
           }
           val kept = buf.drop(matureLen)
           state.update((kept, carry))
-          if (!state.hasTimedOut || kept.nonEmpty)
-            state.setTimeoutTimestamp(wm + 1000)
+          // wake in the first batch whose watermark passes the earliest held
+          // row (buf is sorted; the timeout fires once ts < wm, the maturity
+          // rule above); nothing held, no timer. Spark rejects timestamps
+          // <= 0, and a held row has ts >= wm >= 0
+          kept.headOption.foreach(r => state.setTimeoutTimestamp(millis(r) max 1L))
           out.iterator
         })(stateEnc, outEnc)
       .toDF()

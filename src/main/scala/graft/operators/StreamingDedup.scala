@@ -72,9 +72,10 @@ object StreamingDedup {
               Iterator.empty
             } else {
               state.update((cand, false))
-              // re-awaken as the watermark advances so a quiet key still
-              // emits its pending candidate
-              state.setTimeoutTimestamp(wm + 1000)
+              // a quiet key wakes in the first batch whose watermark passes
+              // its candidate (the timeout fires once ts < wm, the emission
+              // rule above); Spark rejects timestamps <= 0, and wm >= 0
+              state.setTimeoutTimestamp(millis(cand.get) max 1L)
               Iterator.empty
             }
           }

@@ -700,6 +700,40 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("streaming as-of join emits a held row in the first batch whose watermark passes it") {
+    import graft.operators.AsOfJoin
+    implicit val sqlCtx = spark.sqlContext
+    val lm = MemoryStream[(Long, Long, Timestamp)]
+    val rm = MemoryStream[(Long, String, Timestamp)]
+    val out = AsOfJoin.leftAsOfStream(
+      lm.toDF().toDF("k", "lid", "lts"),
+      rm.toDF().toDF("k", "payload", "rts"),
+      "k", "lts", "rts", Seq("payload"), watermarkDelay = "1 second")
+    val q = out.writeStream.format("memory").queryName("asof_step_out")
+      .outputMode("append").start()
+    def emitted(): Map[Long, String] = spark.table("asof_step_out").collect()
+      .map(r => r.getAs[Long]("lid") -> r.getAs[String]("payload")).toMap
+    try {
+      // both sides at 00:20 → watermark 00:19; key 1 holds a version at 00:19.2
+      lm.addData((9L, 0L, ts("2024-01-01 00:00:20")))
+      rm.addData((9L, "r", ts("2024-01-01 00:00:20")), (1L, "v1", ts("2024-01-01 00:00:19.2")))
+      q.processAllAvailable()
+      // key 1's left row at 00:19.5 is above the 00:19 watermark: held
+      lm.addData((1L, 1L, ts("2024-01-01 00:00:19.5")))
+      q.processAllAvailable()
+      assert(emitted().isEmpty)
+      // both sides at 00:20.6 → watermark 00:19.6 passes the held rows of key 1
+      // only; key 1 gets no new input, so only its timer can emit it
+      lm.addData((9L, 2L, ts("2024-01-01 00:00:20.6")))
+      rm.addData((9L, "r2", ts("2024-01-01 00:00:20.6")))
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!emitted().contains(1L) && System.nanoTime() < deadline) {
+        q.processAllAvailable(); Thread.sleep(100)
+      }
+      assert(emitted() == Map(1L -> "v1"), s"got ${emitted()}")
+    } finally q.stop()
+  }
+
   test("streaming MATCH_RECOGNIZE matches the batch operator on the same data") {
     import graft.operators.MatchRecognize
     import graft.operators.MatchRecognize._
@@ -839,6 +873,30 @@ class StreamingSpec extends SparkTestBase {
       val stateRows = Option(q.lastProgress).toSeq
         .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
       assert(stateRows == 2, s"expected 2 state rows (emitted flags), got $stateRows")
+    } finally q.stop()
+  }
+
+  test("event-time dedup emits a quiet key in the first batch whose watermark passes it") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Int, Timestamp, Double)]
+    val src = mem.toDF().toDF("k", "ts", "v").withWatermark("ts", "1 second")
+    val out = graft.operators.StreamingDedup.keepFirstByEventTime(src, Seq("k"), "ts")
+    val q = out.writeStream.outputMode("append").format("memory")
+      .queryName("etd_timer_out").start()
+    def emitted(): Set[Int] = spark.table("etd_timer_out").collect().map(_.getInt(0)).toSet
+    try {
+      mem.addData((1, ts("2024-01-01 00:00:20"), 1.0)) // watermark → 00:19
+      q.processAllAvailable()
+      mem.addData((2, ts("2024-01-01 00:00:19.5"), 2.0)) // key A: above 00:19, pending
+      q.processAllAvailable()
+      assert(emitted().isEmpty)
+      // watermark → 00:19.6: passes A (quiet from here on), not the 00:20 row
+      mem.addData((3, ts("2024-01-01 00:00:20.6"), 3.0))
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!emitted().contains(2) && System.nanoTime() < deadline) {
+        q.processAllAvailable(); Thread.sleep(100)
+      }
+      assert(emitted() == Set(2), s"got ${emitted()}")
     } finally q.stop()
   }
 
@@ -1342,5 +1400,43 @@ class StreamingSpec extends SparkTestBase {
       finish(j3)
       assert(sinkRows().size == 5000, "restart over an exhausted checkpoint re-ingested")
     } finally Jobs.stopAll()
+  }
+
+  test("streaming SELECT survives a micro-batch larger than the ring buffer") {
+    import graft.engine.{Gateway, TableEnv}
+    TableEnv.clear()
+    val gw = new Gateway(spark)
+    val h = gw.openSession()
+    val sess = gw.session(h).spark
+    implicit val sqlCtx = sess.sqlContext
+    val mem = MemoryStream[(Int, Timestamp)]
+    mem.toDF().toDF("k", "ts").withWatermark("ts", "1 second")
+      .createOrReplaceTempView("burst_src")
+    val op = gw.executeStatement(h,
+      """SELECT k, ts FROM (
+        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY k ORDER BY ts ASC) AS rn
+        |  FROM burst_src) WHERE rn = 1""".stripMargin)
+    val q = sess.streams.active.head
+    try {
+      // 6,000 pending keys become final in ONE micro-batch once the far-future
+      // row moves the watermark: every shuffle partition emits more rows than
+      // the 1,000-row buffer holds, and each must still commit its state
+      mem.addData((0 until 6000).map(k => (k, ts("2024-01-01 00:00:00"))))
+      q.processAllAvailable()
+      mem.addData((6000, ts("2024-01-02 00:00:00")))
+      q.processAllAvailable()
+      // the last row moves the watermark past the far-future row
+      mem.addData((6001, ts("2024-01-03 00:00:00")))
+      var page = gw.fetchResults(op, 0)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!page.rows.lastOption.exists(_.head == 6000) && System.nanoTime() < deadline) {
+        q.processAllAvailable(); Thread.sleep(100); page = gw.fetchResults(op, 0)
+      }
+      assert(q.isActive && q.exception.isEmpty, s"query died: ${q.exception}")
+      assert(page.columns == Seq("k", "ts") && page.rows.size == 1000, s"${page.rows.size} rows")
+      assert(page.rows.last.head == 6000, s"last row: ${page.rows.last}")
+      // the burst's 999 rows before it are distinct burst keys
+      assert(page.rows.init.map(_.head.asInstanceOf[Int]).toSet.size == 999)
+    } finally gw.cancelOperation(op)
   }
 }
