@@ -4,18 +4,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.GraftSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    // session warmup (not charged to any query): table registration, function
-    // registration, codegen/JIT of a trivial plan and of the custom kernel
-    // expressions (their first evaluation pays C2 compilation)
+    // session warmup (not charged to any query): table registration,
+    // codegen/JIT of a trivial plan and of the custom kernel expressions
+    // (their first evaluation pays C2 compilation)
     Tables.registerAll(spark, sfDir)
-    functions.FlinkFunctions.registerAll(spark)
     spark.sql("SELECT count(*) FROM nation").collect()
     spark.range(256).selectExpr("cast(id as string) AS s")
       .select(
@@ -26,9 +20,9 @@ object Bench {
     // warm the banded-pairs plan SHAPE (windows + self-join + distinct +
     // jaccard verify) on a tiny synthetic frame: the generated classes land
     // in the codegen cache keyed by source, so the real gate's first timed
-    // run doesn't pay ~4-8 s of cold plan compilation that AbProbe r11
-    // attributed (steady state 0.9-1.8 s; the cost is one-time, not
-    // per-data). Same contract as the kernel warmup above: JIT/codegen
+    // run doesn't pay ~4-8 s of cold plan compilation (attributed in
+    // PLANS.md "Round-11 attribution: the four r10 driver-bench outliers";
+    // steady state 0.9-1.8 s; the cost is one-time, not per-data). Same contract as the kernel warmup above: JIT/codegen
     // warmth the recorded baseline already assumes.
     graft.pipeline.Dedup.nearDuplicatePairs(
       spark.range(256).selectExpr("id AS doc_id", "repeat(uuid(), 4) AS text"),

@@ -103,21 +103,19 @@ object Tables {
       raw
   }
 
-  private val registered =
-    scala.collection.concurrent.TrieMap.empty[Int, String]
+  // memo keyed by the session OBJECT, weakly (as in FlinkFunctions): an
+  // identityHashCode key can collide across sessions and silently skip
+  // registration, and a strong key would pin closed sessions forever
+  private val registered = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, String]())
 
   /** Register every test table as a temp view. Memoized per session (keyed on
     * the currently-registered dir, so switching dirs re-registers):
     * re-registration re-reads 10 parquet footers (~seconds) and was the
     * dominant cost of every SQL-surface query before this guard. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit = {
-    val key = System.identityHashCode(spark)
-    if (!registered.get(key).contains(sfDir)) {
+  def registerAll(spark: SparkSession, sfDir: String): Unit =
+    if (registered.get(spark) != sfDir) {
       names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
-      // driver-built sessions reach the engine only through here: make sure
-      // they get the optimizer extension too (idempotent)
-      graft.plans.CumulateTwoPhase.install(spark)
-      registered.put(key, sfDir)
+      registered.put(spark, sfDir): Unit
     }
-  }
 }

@@ -167,12 +167,10 @@ class Gateway(root: SparkSession) {
 
   def openSession(name: String = "default"): String = {
     val handle = s"$name-${UUID.randomUUID()}"
-    val s = root.newSession()
     // newSession() isolates the function registry along with conf/temp views
-    // — re-register the Flink-dialect functions so every gateway session
-    // speaks the full surface
-    graft.functions.FlinkFunctions.registerAll(s)
-    graft.functions.Aggregators.registerAll(s)
+    // and starts with no extra optimizer rules — prepare it like the root so
+    // every gateway session speaks the full surface and plans the same way
+    val s = GraftSession.prepare(root.newSession())
     // 1-row scratch relation (the corpus SELECTs FROM dual, Oracle-style)
     try s.sql("CREATE OR REPLACE TEMPORARY VIEW dual AS SELECT 1 AS dummy")
     catch { case _: Exception => () }

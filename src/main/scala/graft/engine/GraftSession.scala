@@ -2,14 +2,18 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-/** Library entry point: a SparkSession configured the way the engine expects
-  * (UTC wall-clock semantics, AQE with skew handling, sane local shuffle
-  * width, `file:` paths on the fork-free local filesystem) with every
-  * Flink-dialect function registered. A user of the reference toolkit
-  * starts here:
+/** Library entry point and the engine's one session factory: a SparkSession
+  * configured the way the engine expects (UTC wall-clock semantics, AQE with
+  * skew handling, sane local shuffle width, `file:` paths on the fork-free
+  * local filesystem) and prepared by [[prepare]]. Every session the engine
+  * hands out gets the same `prepare`: `create` runs it on the root session
+  * and `Gateway.openSession` on each gateway session, because
+  * `SparkSession.newSession()` starts with an empty function registry and
+  * no extra optimizer rules. A user of the reference toolkit starts here:
   *
   * {{{
-  * val spark = GraftSession.create()        // or .configure(existingBuilder)
+  * val spark = GraftSession.create()
+  * // or: GraftSession.prepare(GraftSession.configure(builder).getOrCreate())
   * val gw = new Gateway(spark)
   * val session = gw.openSession("default")
   * gw.executeScript(session, "CREATE TABLE t (...) WITH (...); SELECT ...")
@@ -35,13 +39,20 @@ object GraftSession {
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-  /** Local session (tests / single node). Cluster deployments pass their own
-    * master/resource config through `configure`. */
-  def create(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = configure(SparkSession.builder().master(master)
+  /** Local session (tests, tools, single node). Other `spark.*` settings
+    * reach the context as JVM system properties, which `SparkConf` reads.
+    * Cluster deployments pass their own master/resource config through
+    * `configure` and then call [[prepare]]. */
+  def create(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession =
+    prepare(configure(SparkSession.builder().master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+      .getOrCreate())
+
+  /** Per-session setup, the one place it runs: the Flink-dialect functions,
+    * the `dsum4` aggregate and the two-phase CUMULATE optimizer rule.
+    * Idempotent per session. */
+  def prepare(spark: SparkSession): SparkSession = {
     graft.functions.FlinkFunctions.registerAll(spark)
     graft.functions.Aggregators.registerAll(spark)
     graft.plans.CumulateTwoPhase.install(spark)

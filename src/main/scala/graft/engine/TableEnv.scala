@@ -586,10 +586,10 @@ object TableEnv {
   /** Flink type name → Spark DDL type (SURVEY.md §1.2 mapping). */
   /** Can `format`'s reader still decode files written with column type
     * `from` once the declared type becomes `to`? Probed empirically per
-    * format (tools/RetypeProbe, r14) — anything outside these sets either
-    * fails every later read with a raw decoder error or, worse, silently
-    * corrupts values (the avro reader decodes DATE days as TIMESTAMP micros
-    * and misscales DECIMAL on a scale change). Types are the stored
+    * format (r14, PLANS.md "Retype guard") — anything outside these sets
+    * either fails every later read with a raw decoder error or, worse,
+    * silently corrupts values (the avro reader decodes DATE days as
+    * TIMESTAMP micros and misscales DECIMAL on a scale change). Types are the stored
     * uppercase Spark DDL forms (TIMESTAMP already mapped to TIMESTAMP_NTZ). */
   private[engine] def retypeCompatible(format: String, from0: String, to0: String): Boolean = {
     val from = from0.trim.toUpperCase; val to = to0.trim.toUpperCase

@@ -33,10 +33,8 @@ object Aggregators {
     def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
 
-  /** Register SQL-callable UDAF names (memoized per session). */
-  private val registered = scala.collection.concurrent.TrieMap.empty[Int, Boolean]
-  def registerAll(spark: SparkSession): Unit = {
-    if (registered.putIfAbsent(System.identityHashCode(spark), true).nonEmpty) return
-    spark.udf.register("dsum4", udaf(new ExactDecimalSum))
-  }
+  /** Register SQL-callable UDAF names. Called once per session by
+    * `GraftSession.prepare`; re-registering replaces the same function. */
+  def registerAll(spark: SparkSession): Unit =
+    spark.udf.register("dsum4", udaf(new ExactDecimalSum)): Unit
 }

@@ -84,7 +84,8 @@ object HashKernels {
     * containment to radius 3 and the 4-band probabilistic tail above —
     * the recall profile the 64-bit hash only offers below 65k rows.
     *
-    * Two measured properties (tools/PhashRecallProbe, planted-edit probe):
+    * Two measured properties (planted-edit probe, PLANS.md "Verdict #5: the
+    * 128-bit perceptual hash"):
     * SCATTERED byte-value edits flip about as many bits here as on the
     * 64-bit hash (each edit perturbs ~1 segment at either granularity —
     * median d128 == d64 at 1..16 planted edits), so genuine near-dups stay

@@ -96,7 +96,8 @@ object Aggregates {
     // engine-specific, so it enters the result only through a relative-
     // error bound against the exact count computed in the same query. The
     // default rsd is 0.05; measured relative error is ≤0.027 at
-    // sf0.001/0.01/0.1 (tools/ContractProbe), gated at ≤0.10 — any HLL
+    // sf0.001/0.01/0.1 (PLANS.md "Round-11: oracle contracts for the
+    // hash-dependent gates"), gated at ≤0.10 — any HLL
     // regression past 2× rsd flips the boolean and the oracle hash
     // mismatches.
     "q_agg_approx_distinct" -> { (s, dir) =>

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables
 import graft.engine.FlinkDialect
-import graft.functions.FlinkFunctions
 
 /** Queries written in FLINK SQL and executed through the dialect layer
   * (engine/FlinkDialect.scala) — this puts the text-rewrite engine itself
@@ -16,7 +15,6 @@ object DialectQueries {
 
   private def fsql(s: SparkSession, dir: String, q: String): DataFrame = {
     Tables.registerAll(s, dir)
-    FlinkFunctions.registerAll(s)
     FlinkDialect.sql(s, q)
   }
 
@@ -51,7 +49,6 @@ object DialectQueries {
     // typed Aggregator UDAF: exact decimal sum registered as SQL function
     "q_agg_typed_udaf" -> { (s, dir) =>
       Tables.registerAll(s, dir)
-      graft.functions.Aggregators.registerAll(s)
       s.sql(
         """SELECT l_returnflag, dsum4(l_quantity) AS sum_qty, COUNT(*) AS n
           |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.FlinkFunctions
 
 /** Scalar-function coverage (SURVEY.md §2.10): each query exercises one
   * function family end-to-end against a DuckDB mirror. Functions whose
@@ -18,7 +17,6 @@ object Funcs {
 
   private def sql(s: SparkSession, dir: String, q: String): DataFrame = {
     Tables.registerAll(s, dir)
-    FlinkFunctions.registerAll(s)
     s.sql(q)
   }
 

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables
-import graft.functions.FlinkFunctions
 
 /** Second scalar-function coverage batch (SURVEY.md §2.10): overlay/locate/
   * instr/base64/split_part/starts-ends-with/printf, cbrt/degrees/radians/
@@ -15,7 +14,6 @@ object Funcs2 {
 
   private def sql(s: SparkSession, dir: String, q: String): DataFrame = {
     Tables.registerAll(s, dir)
-    FlinkFunctions.registerAll(s)
     s.sql(q)
   }
 

@@ -63,8 +63,8 @@ object PipelineQueries {
     *     oracles use) against the codegen vec_dot kernel the operator ran,
     *     so silent kernel drift breaks the gate;
     *   - recall_floor_ok: recall@k vs exact brute force ≥ 0.05, under the
-    *     measured floor at every sweep SF (tools/RecallProbe: ivf min
-    *     0.10, lsh(nBits=4) min 0.10).
+    *     measured floor at every sweep SF (PLANS.md §14 "Round 7": ivf
+    *     min 0.10, lsh(nBits=4) min 0.10).
     * A query with NO results keeps its row (left join from the query set)
     * with recall_floor_ok=false — an empty probe fails loudly, the
     * q_sim_index_parity convention. */
@@ -280,8 +280,8 @@ object PipelineQueries {
     //    in signature/banding/pairing/clustering flips it;
     //  * near-copy recall IS seed-dependent per pair (one mutated shingle
     //    window), so it enters only as one aggregate floor boolean —
-    //    measured 1.00 at sf0.001/0.01/0.1 (tools/ContractProbe), gated
-    //    at ≥ 0.8.
+    //    measured 1.00 at sf0.001/0.01/0.1 (PLANS.md "Round-11: oracle
+    //    contracts for the hash-dependent gates"), gated at ≥ 0.8.
     "q_dedup_minhash_lsh" -> { (s, dir) =>
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val base = docs.filter(col("doc_id") < 50 && length(col("text")) >= 100)
@@ -348,7 +348,8 @@ object PipelineQueries {
     // cluster, same candidate bucket, connected, independent of where
     // k-means landed. Near copies (per-element noise ≤0.003) enter only
     // through an aggregate recall floor (measured 1.00 at
-    // sf0.001/0.01/0.1, tools/ContractProbe; gated ≥0.8).
+    // sf0.001/0.01/0.1, PLANS.md "Round-11 additions: semantic dedup
+    // margin"; gated ≥0.8).
     "q_dedup_semantic" -> { (s, dir) =>
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val base = e.filter(col("vec_id") < 50)
@@ -422,8 +423,8 @@ object PipelineQueries {
     // oracle), and the engine-dependent IVF/LSH results enter only through
     // threshold booleans asserted IN the query — a recall regression flips
     // them and the oracle hash mismatches. Thresholds sit under the measured
-    // floors at every sweep SF (tools/RecallProbe: ivf min 0.10 avg ≥0.52,
-    // lsh(nBits=4) min 0.10 avg ≥0.44).
+    // floors at every sweep SF (PLANS.md §14 "Round 7": ivf min 0.10 avg
+    // ≥0.52, lsh(nBits=4) min 0.10 avg ≥0.44).
     "q_sim_recall" -> { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val e = t(s, dir, "embeddings")

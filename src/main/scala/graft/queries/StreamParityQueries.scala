@@ -20,7 +20,8 @@ import graft.Tables
   * Scale note: this is a correctness INSTRUMENT, deliberately bounded — the
   * slice is collected to the driver to feed MemoryStream waves (~2k rows
   * regardless of SF). The operators' scale paths are exercised by their own
-  * gates and the ScaleProbe; parity needs determinism, not volume.
+  * gates and the 2M-row probes in PLANS.md "Scale probe beyond sf0.1";
+  * parity needs determinism, not volume.
   * Event time is derived as `timestamp_seconds(event_id)` — strictly
   * increasing, so ORDER BY it is a total order and batch/stream tie
   * handling cannot diverge by accident of input order.
@@ -290,17 +291,6 @@ object StreamParityQueries {
       .select(col("user_id"), col("event_id"), col("ets"), col("c_mktsegment"))
     (batch, streamed)
   }
-
-  /** Tool hook (ParityDebug): the raw (batch, streamed) frames behind an op. */
-  private[graft] def debugPair(op: String): (SparkSession, String) => (DataFrame, DataFrame) =
-    op match {
-      case "cep" => pairCep
-      case "asof" => pairAsof
-      case "tumble" => pairTumble
-      case "dedup" => pairDedup
-      case "lookup" => pairLookup
-      case other => throw new IllegalArgumentException(s"unknown parity op '$other'")
-    }
 
   val queries: Map[String, Q] = Map(
     "q_stream_parity_cep" -> { (s, dir) => withParityConf(s) {

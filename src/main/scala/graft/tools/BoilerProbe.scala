@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** r20 (journal "Not yet optimized" #4): stage-by-stage attribution of
@@ -41,13 +41,8 @@ object BoilerProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/sf100f")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val parts = sys.env.getOrElse("BOILER_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.rdd.compress", "true")
-      .getOrCreate()
+    sys.props("spark.rdd.compress") = "true" // a SparkContext setting: read at create
+    val spark = graft.engine.GraftSession.create(s"local[$cpus]", parts.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     graft.Tables.registerAll(spark, sfDir)
     spark.sql("SELECT count(*) FROM nation").collect()

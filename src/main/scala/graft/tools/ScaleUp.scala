@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Replicates a test-data directory N× into parallel key universes for the
@@ -59,12 +59,7 @@ object ScaleUp {
     val only: Option[Set[String]] =
       args.lift(4).filter(t => t.nonEmpty && t != "all")
         .map(_.split(",").map(_.trim).toSet)
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.engine.GraftSession.create("local[32]", 32)
     s.sparkContext.setLogLevel("WARN")
 
     def tbl(n: String) = graft.Tables.load(s, src, n)

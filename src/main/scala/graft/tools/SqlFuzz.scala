@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import scala.util.Random
 import java.nio.file.{Files, Paths}
 
@@ -880,18 +879,10 @@ object SqlFuzz {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, seedS, countS) = args.take(4)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.GraftSession.create(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]", 8)
     spark.sparkContext.setLogLevel("ERROR")
     graft.Tables.registerAll(spark, sfDir)
-    graft.functions.FlinkFunctions.registerAll(spark)
-    graft.functions.Aggregators.registerAll(spark)
     new java.io.File(outDir).mkdirs()
     // optional 5th arg: comma-separated shape indices to restrict the draw
     // (a targeted campaign on a new shape, e.g. "20,21,22")

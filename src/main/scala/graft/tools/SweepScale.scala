@@ -22,8 +22,9 @@ import org.apache.spark.sql.SparkSession
   *    reference decade exceeds the flag threshold (12x for 10x data), the
   *    sweep re-runs that gate once and records BOTH passes — one-off host
   *    stalls attribute themselves in the artifact instead of needing a
-  *    manual best-of-2 AggProbe session afterwards (every r15 >15x flag
-  *    collapsed to 1.6-4.3x under exactly this treatment).
+  *    manual best-of-2 re-attribution afterwards (PLANS.md "Fourth-decade
+  *    sweep with bounded-output variants": every r15 >15x flag collapsed
+  *    to 1.6-4.3x under exactly this treatment).
   *
   * Usage:
   *   SPARK_GRAFT_SF_DIR=target/sf10f  runMain graft.tools.SweepScale out10.json
@@ -153,21 +154,16 @@ object SweepScale {
         else
           "[sweep] corpus has NO digest.json — cross-round identity unchecked")
     }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // K-pass position slices don't delta-compress in arrival order, so
-      // uncompressed DISK_ONLY scratch ran 40 GB for one sf100 spans gate
-      // (measured r18); lz4 on write-once/read-once blocks is the right
-      // trade at every decade this sweep runs
-      .config("spark.rdd.compress", "true")
-    memFraction.foreach(f => builder.config("spark.memory.fraction", f.toString))
-    val spark = builder.getOrCreate()
+    // SparkContext settings go in as system properties, which SparkConf
+    // reads at create. K-pass position slices don't delta-compress in
+    // arrival order, so uncompressed DISK_ONLY scratch ran 40 GB for one
+    // sf100 spans gate (measured r18); lz4 on write-once/read-once blocks is
+    // the right trade at every decade this sweep runs
+    sys.props("spark.rdd.compress") = "true"
+    memFraction.foreach(f => sys.props("spark.memory.fraction") = f.toString)
+    val spark = graft.engine.GraftSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     graft.Tables.registerAll(spark, sfDir)
-    graft.functions.FlinkFunctions.registerAll(spark)
     spark.sql("SELECT count(*) FROM nation").collect()
     // warm the OS page cache with a raw sequential read of every data file
     // (parquet count-star reads only footers, so timed gates would otherwise
@@ -271,7 +267,8 @@ object SweepScale {
       // bit_xor, not sum: xxhash64 spans the full long range, so an ANSI
       // sum overflows after two rows; xor is overflow-free and still
       // order-independent.
-      // r18 (verdict #7 A/B, tools/ForcingProbe): hash columns NATIVELY —
+      // r18 (verdict #7 A/B, PLANS.md "Sweep forcing: native xxhash64
+      // fold"): hash columns NATIVELY —
       // the r16-r17 cast-to-string fold paid Java double/long formatting
       // per output cell, a cost that scales with OUTPUT rows, not corpus
       // bytes (q_corpus_repetition at sf100: 30.7 s cast vs 25.8 s native;

@@ -270,8 +270,8 @@ class AlterSchemaSpec extends SparkTestBase {
   }
 
   test("MODIFY retype guard: reader-incompatible retypes refuse while data exists (r14)") {
-    // probed matrix (tools/RetypeProbe): a retype the format's reader can't
-    // convert used to succeed at ALTER time and poison every later read
+    // probed matrix (PLANS.md "Retype guard"): a retype the format's reader
+    // can't convert used to succeed at ALTER time and poison every later read
     // with a raw decoder error — or silently corrupt values on avro
     TableEnv.clear()
     val gw = new Gateway(spark)
@@ -379,8 +379,8 @@ class AlterSchemaSpec extends SparkTestBase {
     // csv rows bind by POSITION: ADD (even at the end — old rows then carry
     // the wrong token count), DROP, and MODIFY-reposition all misread every
     // pre-evolution file, or silently misassign same-typed columns. json/
-    // avro/orc/parquet bind by name and evolve freely (probed,
-    // tools/CsvEvolveProbe).
+    // avro/orc/parquet bind by name and evolve freely (probed r14, PLANS.md
+    // "Round-14 final tallies").
     TableEnv.clear()
     val gw = new Gateway(spark)
     val h = gw.openSession("csv_freeze")

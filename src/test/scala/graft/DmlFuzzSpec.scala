@@ -335,7 +335,8 @@ class DmlFuzzSpec extends SparkTestBase {
         if (orcStrings.nonEmpty && rnd.nextBoolean()) {
           // orc-only: STRING->BIGINT is within orc's free-conversion family;
           // the generator's strings are never numeric, so every existing
-          // value reads NULL after the retype (probed r14, RetypeProbe)
+          // value reads NULL after the retype (probed r14, PLANS.md
+          // "Retype guard")
           val c = orcStrings(rnd.nextInt(orcStrings.size))
           exec(s"ALTER TABLE evo_t MODIFY ${c.name} BIGINT")
           schema = schema.map(x => if (x.name == c.name) x.copy(typ = "BIGINT") else x)

@@ -603,7 +603,6 @@ class EngineSpec extends SparkTestBase {
 
   test("COLLECT(x) rewrites to a multiset (element → count map)") {
     Tables.registerAll(spark, sfDir)
-    graft.functions.FlinkFunctions.registerAll(spark)
     val df = FlinkDialect.sql(spark,
       "SELECT n_regionkey, COLLECT(n_name) AS names FROM nation GROUP BY n_regionkey")
     val m = df.filter(col("n_regionkey") === 0).head().getMap[String, Int](1)

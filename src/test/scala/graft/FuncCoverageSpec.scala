@@ -1,7 +1,5 @@
 package graft
 
-import graft.functions.{Aggregators, FlinkFunctions}
-
 /** §2.10 completeness check: every Flink built-in name the reference grammar
   * declares (syntaxes/flink.tmLanguage.json:415-471) must resolve in a graft
   * session — as a Spark builtin, a registered shim, or via a documented
@@ -94,8 +92,6 @@ class FuncCoverageSpec extends SparkTestBase {
   )
 
   test("every declared Flink function name resolves (or is pinned unsupported)") {
-    FlinkFunctions.registerAll(spark)
-    Aggregators.registerAll(spark)
     def resolves(name: String): Boolean =
       try { spark.sql(s"DESCRIBE FUNCTION `${name.toLowerCase}`").collect(); true }
       catch { case _: Exception => false }
@@ -118,7 +114,6 @@ class FuncCoverageSpec extends SparkTestBase {
   }
 
   test("pipeline kernels are callable from SQL at codegen speed") {
-    FlinkFunctions.registerAll(spark)
     val r = spark.sql(
       """SELECT simhash64('a b c') AS sh,
         |       size(minhash_sig('abcdefgh', 3, 8)) AS mh,

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.FlinkFunctions
 import graft.operators.Windows
 
 /** Functions whose outputs are engine-defined (no cross-engine oracle):
@@ -12,10 +11,8 @@ import graft.operators.Windows
 class FuncsSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def one(sqlText: String) = {
-    FlinkFunctions.registerAll(spark)
+  private def one(sqlText: String) =
     spark.sql(s"SELECT $sqlText AS v").head().get(0)
-  }
 
   test("engine-defined string functions behave per Spark contract") {
     assert(one("soundex('Robert')") == "R163")

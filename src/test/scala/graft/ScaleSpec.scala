@@ -232,7 +232,6 @@ class ScaleSpec extends SparkTestBase {
               |FROM TABLE(CUMULATE(TABLE events, DESCRIPTOR(ts), INTERVAL '15' MINUTES, INTERVAL '1' HOUR))
               |GROUP BY window_start, window_end, event_type""".stripMargin
     Tables.registerAll(spark, sfDir)
-    graft.functions.FlinkFunctions.registerAll(spark)
     val prev = spark.experimental.extraOptimizations
     try {
       CumulateTwoPhase.install(spark)
@@ -329,5 +328,34 @@ class ScaleSpec extends SparkTestBase {
       assert(nAggs(CumulateTwoPhase(wedged)) == 2,
         CumulateTwoPhase(wedged).treeString.take(1200))
     } finally spark.experimental.extraOptimizations = prev
+  }
+
+  test("CumulateTwoPhase rule: gateway sessions get the rule; results match rule-off") {
+    // newSession() starts with no extra optimizer rules: a gateway session
+    // must be prepared like the root or its CUMULATE plans run one-phase
+    val gw = new graft.engine.Gateway(spark)
+    val h = gw.openSession("cumulate")
+    try {
+      val s = gw.session(h).spark
+      assert(s ne spark)
+      // load the one table directly (not via Tables.registerAll) so nothing
+      // but openSession can have set the session's rules
+      Tables.load(s, sfDir, "events").createOrReplaceTempView("events")
+      val q = """SELECT window_start, window_end, event_type, COUNT(*) AS cnt
+                |FROM TABLE(CUMULATE(TABLE events, DESCRIPTOR(ts), INTERVAL '15' MINUTES, INTERVAL '1' HOUR))
+                |GROUP BY window_start, window_end, event_type""".stripMargin
+      val on = graft.engine.FlinkDialect.sql(s, q)
+      assert(on.queryExecution.optimizedPlan.treeString.contains("__cum_p0"),
+        s"rule did not fire on a gateway session " +
+          s"(${s.experimental.extraOptimizations.size} extra rules)")
+      val withRule = on.orderBy("window_start", "window_end", "event_type").collect().toSeq
+      s.experimental.extraOptimizations = Nil // this session only
+      val off = graft.engine.FlinkDialect.sql(s, q)
+      assert(!off.queryExecution.optimizedPlan.treeString.contains("__cum_p0"))
+      val noRule = off.orderBy("window_start", "window_end", "event_type").collect().toSeq
+      assert(withRule.nonEmpty && withRule == noRule)
+      assert(spark.experimental.extraOptimizations.contains(graft.plans.CumulateTwoPhase),
+        "clearing a gateway session's rules must leave the root's")
+    } finally gw.closeSession(h)
   }
 }

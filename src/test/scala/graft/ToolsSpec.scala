@@ -2,10 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.{CorpusDigest, SweepScale}
+import scala.jdk.CollectionConverters._
 
 /** Pins for the measurement-harness helpers that gate sweep honesty (r18):
-  * the corpus-digest comparison SweepScale refuses on, and the stale-digest
-  * file-fingerprint check. Pure JVM — no Spark session. */
+  * the corpus-digest comparison SweepScale refuses on, the stale-digest
+  * file-fingerprint check, and the one-session-factory guard. Pure JVM —
+  * no Spark session. */
 class ToolsSpec extends AnyFunSuite {
 
   private val v2 =
@@ -51,5 +53,22 @@ class ToolsSpec extends AnyFunSuite {
       // a v1 digest has no fingerprint: nothing to check, never stale
       assert(SweepScale.staleTables("""{"documents":{"rows":1,"h":0}}""", dir.toString).isEmpty)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
+  test("GraftSession is the only session factory: no other builder call in src/") {
+    // split so this file does not match itself
+    val needle = "SparkSession" + ".builder("
+    val roots = Seq("src/main", "src/test").map(java.nio.file.Paths.get(_))
+    roots.foreach(r => assert(java.nio.file.Files.isDirectory(r), s"missing $r"))
+    val hits = roots.flatMap { r =>
+      val walk = java.nio.file.Files.walk(r)
+      // latin-1 decodes any byte sequence (some specs embed non-UTF-8 bytes)
+      try walk.iterator().asScala.filter(p => java.nio.file.Files.isRegularFile(p) &&
+          new String(java.nio.file.Files.readAllBytes(p), "ISO-8859-1").contains(needle))
+        .toList
+      finally walk.close()
+    }
+    assert(hits.map(_.getFileName.toString) == Seq("GraftSession.scala"),
+      s"builder call sites outside GraftSession: ${hits.mkString(", ")}")
   }
 }
