@@ -25,12 +25,13 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   */
 class Gateway(root: SparkSession) {
 
-  // binding re-materializations (rename/ALTER/DML rebinds) must not clobber
-  // a session's temp-view/temp-table shadow — shadow knowledge (scope map +
-  // plain-relation registry) lives in the shared TableEnv, keyed per session
-  // SparkSession, so it is exact across CONCURRENT gateway instances (r15
-  // ADVICE: the per-gateway probe hook meant the latest-constructed gateway
-  // owned it, reintroducing the clobber across instances)
+  // Bindings and catalog views live only in the shared TableEnv registry;
+  // every session resolves them at analysis time (CatalogRelations), so no
+  // session holds a copy and no DDL has to reach other sessions. Session
+  // objects (TEMPORARY views, connector-less temporary tables) are Spark
+  // temp views and shadow shared names through Spark's resolution order;
+  // the TableEnv scope map and plain-relation registry, keyed per session,
+  // only decide Flink's DDL conflict answers.
 
   final class Session(val handle: String, val spark: SparkSession) {
     var alive = true
@@ -175,7 +176,6 @@ class Gateway(root: SparkSession) {
     try s.sql("CREATE OR REPLACE TEMPORARY VIEW dual AS SELECT 1 AS dummy")
     catch { case _: Exception => () }
     sessions.put(handle, new Session(handle, s))
-    TableEnv.registerSession(s) // cross-instance invalidation sweeps reach it
     handle
   }
 
@@ -196,14 +196,10 @@ class Gateway(root: SparkSession) {
     removed.foreach { s =>
       s.alive = false
       sessionModules.remove(s.spark)
-      // purge this session's temp-view definitions and materialization
-      // cache with its scope — the UUID is unreachable after removal, so
-      // without this a long-lived gateway accumulates dead entries forever
-      TableEnv.releaseScope(s.spark).foreach { scope =>
-        TableEnv.dropScope(scope) // purges view defs + plain relations
-        materializedViews.keys.filter(_._1 == scope)
-          .foreach(materializedViews.remove)
-      }
+      // purge this session's temp-view definitions with its scope — the
+      // UUID is unreachable after removal, so without this a long-lived
+      // gateway accumulates dead entries forever
+      TableEnv.releaseScope(s.spark).foreach(TableEnv.dropScope)
     }
     metaCache.invalidatePrefix(s"$handle::")
   }
@@ -230,13 +226,14 @@ class Gateway(root: SparkSession) {
     """(?is)INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?([\w.`]+)\s*(?:\(([^)]+)\)\s*)?((?:SELECT|VALUES).*)""".r
   private val ShowCreateRe = """(?is)SHOW\s+CREATE\s+TABLE\s+([\w.`]+)""".r
   private val DescribeRe = """(?is)(?:DESCRIBE|DESC)\s+(?:TABLE\s+)?([\w.`]+)""".r
+  private val ShowColumnsRe = """(?is)SHOW\s+COLUMNS\s+(?:FROM|IN)\s+([\w`]+)""".r
+  private val ShowTablesRe =
+    """(?is)SHOW\s+(TABLES|VIEWS)(?:\s+(?:FROM|IN)\s+([\w.`]+))?(?:\s+LIKE\s+'([^']*)')?""".r
   private val CreateViewRe =
     """(?is)CREATE\s+(OR\s+REPLACE\s+)?(TEMPORARY\s+)?VIEW\s+(IF\s+NOT\s+EXISTS\s+)?([\w.`]+)\s+AS\s+(.*)""".r
   private val ShowCreateViewRe = """(?is)SHOW\s+CREATE\s+VIEW\s+([\w.`]+)""".r
   private val DropViewRe = """(?is)DROP\s+(TEMPORARY\s+)?VIEW\s+(IF\s+EXISTS\s+)?([\w.`]+)""".r
   private val DropTableRe = """(?is)DROP\s+(TEMPORARY\s+)?TABLE\s+(IF\s+EXISTS\s+)?([\w.`]+)\s*;?\s*$""".r
-  private val CreateTableNameRe =
-    """(?is)^\s*CREATE\s+(?:TEMPORARY\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.`]+)""".r
   private val CreateTempTableNameRe =
     """(?is)^\s*CREATE\s+TEMPORARY\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.`]+)""".r
   private val UpdateRe = """(?is)^UPDATE\s+([\w.`]+)\s+SET\s+(.*)$""".r
@@ -613,114 +610,23 @@ class Gateway(root: SparkSession) {
     * close-purges-definitions contract (ConcurrencySpec). */
   def viewScopeOf(handle: String): String = viewScope(session(handle).spark)
 
-  /** Catalog-table visibility across sessions (Flink semantics, r12 — the
-    * streaming soak caught a control session unable to read another
-    * session's sink table): CREATE TABLE registers in the SHARED registry
-    * but materializes a temp view only in the creating session. Any other
-    * session's first statement naming a registry binding materializes it
-    * there lazily. Cost: one word-bounded scan of the (small) registry per
-    * statement; catalog lookups only on a name hit. */
-  private def ensureBindingsVisible(spark: SparkSession, stmt: String): Unit = {
-    def exists(name: String): Boolean =
-      try spark.catalog.tableExists(name) catch { case _: Exception => true }
-    // a session-scoped TEMPORARY view shadows the shared object of the
-    // same name — never clobber its materialization with the binding's
-    def shadowed(name: String): Boolean = locallyShadowed(spark, name)
-    // the statement may reach a binding INDIRECTLY through a catalog
-    // view's definition ("CREATE VIEW v AS SELECT ... FROM some_table";
-    // another session's "SELECT * FROM v" never names some_table) — so
-    // the name scan covers the statement PLUS the transitive closure of
-    // needed catalog-view definitions, or the view's materialization
-    // below fails its analysis and the view is unreadable outside its
-    // creating session (r12 review finding)
-    val catDefs = TableEnv.catalogViews
-    // the session's own TEMPORARY views join the reachability closure: a
-    // statement reaches a binding through a temp-view body too, and the
-    // binding must be re-materialized here even if it was re-created since
-    // this session last named it (r15 fuzz find). Shadow wins on a name
-    // collision, matching resolution order.
-    val defs = catDefs ++ TableEnv.scopeViews(viewScope(spark))
-    def namedIn(text: String): Set[String] = defs.keySet.filter(n =>
-      ("(?i)(?<![\\w`])" + java.util.regex.Pattern.quote(n) + "(?![\\w`])").r
-        .findFirstIn(text).isDefined)
-    var need = namedIn(stmt)
-    var grown = true
-    while (grown) {
-      val more = need ++ need.flatMap(n => namedIn(defs(n)))
-      grown = more.size > need.size
-      need = more
-    }
-    val fullText = (stmt +: need.toSeq.sorted.map(defs)).mkString("\n")
-    def named(name: String): Boolean =
-      ("(?i)(?<![\\w`])" + java.util.regex.Pattern.quote(name) + "(?![\\w`])").r
-        .findFirstIn(fullText).isDefined
-    TableEnv.bindings.foreach { case (name, b) =>
-      if (named(name) && !shadowed(name)) {
-        // filesystem bindings re-materialize on every reference: the temp
-        // view captures a point-in-time file index, so a view bound before
-        // (or during) a streaming INSERT would report that snapshot forever.
-        // Re-binding is metadata-only (footer read), data scans stay lazy.
-        if (!exists(name) || b.connector == "filesystem")
-          try TableEnv.materializeDF(spark, b).foreach(_.createOrReplaceTempView(b.name))
-          catch { case _: Exception => () }
-      }
-    }
-    // shared catalog VIEWS get the same lazy visibility (Flink: catalog
-    // views are cluster objects, not session objects), and refresh when
-    // REDEFINED — a CREATE OR REPLACE VIEW in one session must be seen by
-    // sessions that materialized the old body (temp views inline the
-    // analyzed plan at creation, so staleness is invisible otherwise).
-    // A view's SQL may reference other catalog views: the needed set closes
-    // transitively, staleness propagates dependents-ward (a dependent's
-    // materialization inlines its dependencies' plans), and re-creation
-    // runs dependencies-first. The per-scope materializedViews cache skips
-    // the eager re-analysis when a definition (and all its dependencies)
-    // is unchanged — the common case for every later statement.
-    val scope = viewScope(spark)
-    val candidates = need.filter(n => !shadowed(n))
-    var stale = candidates.filter(n =>
-      !materializedViews.get((scope, n)).contains(defs(n)) || !exists(n))
-    grown = true
-    while (grown) {
-      val more = stale ++ candidates.filter(n =>
-        (namedIn(defs(n)) - n).intersect(stale).nonEmpty)
-      grown = more.size > stale.size
-      stale = more
-    }
-    var remaining = stale
-    while (remaining.nonEmpty) {
-      val ready = remaining.filter(n => (namedIn(defs(n)) - n)
-        .intersect(remaining).isEmpty)
-      val batch = if (ready.nonEmpty) ready else remaining // cycle: any order
-      batch.toSeq.sorted.foreach { name =>
-        try {
-          spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW `$name` AS " +
-            FlinkDialect.rewrite(defs(name)))
-          materializedViews.put((scope, name), defs(name))
-        } catch { case _: Exception => () }
-      }
-      remaining = remaining -- batch
-    }
-  }
-
-  /** (session scope, view name) → the definition text last materialized
-    * there. Purged with the scope on closeSession. */
-  private val materializedViews = TrieMap.empty[(String, String), String]
-
   /** (session scope, name) of connector-less CREATE TEMPORARY TABLE
-    * relations — the SHARED TableEnv registry (instance-independent shadow
-    * knowledge): like a temporary view, a temporary table SHADOWS the
-    * shared object of its name, and the per-reference binding refresh must
-    * not clobber it (a filesystem binding re-materializes on EVERY
-    * reference). Purged with the scope (closeSession → dropScope) and by
-    * DROP TEMPORARY TABLE. */
+    * relations — the SHARED TableEnv registry: like a temporary view, a
+    * temporary table SHADOWS the shared object of its name. Purged with the
+    * scope (closeSession → dropScope) and by DROP TEMPORARY TABLE. */
   private def plainRelations = TableEnv.plainRelations
 
   /** Does `sess` hold a session-local object (temp-view definition or
-    * plain temporary-table relation) shadowing `name`? Sweeps that kill a
-    * shared object's materializations must spare these. */
+    * plain temporary-table relation) shadowing `name`? */
   private def locallyShadowed(sess: SparkSession, name: String): Boolean =
     TableEnv.locallyShadowed(sess, name)
+
+  /** A binding or catalog view that `spark` reaches only through the
+    * analyzer rule: no session temp object or Spark catalog table of the
+    * name. Spark's relation commands (DESCRIBE, SHOW COLUMNS) cannot see it. */
+  private def registryOnly(spark: SparkSession, name: String): Boolean =
+    (TableEnv.lookup(name).isDefined || TableEnv.viewDefExact(name, "").isDefined) &&
+      !spark.catalog.tableExists(name)
 
   /** Column-list / VALUES INSERT alignment (reference corpus F:176-177):
     * unnamed columns receive NULL; everything realigns to the declared
@@ -775,7 +681,6 @@ class Gateway(root: SparkSession) {
     else route0(spark, stmt)
 
   private def route0(spark: SparkSession, stmt: String): OpResult = {
-    ensureBindingsVisible(spark, stmt)
     val upper = stmt.toUpperCase
     stmt match {
       case s if TableEnv.isCreateTableWith(s) &&
@@ -791,27 +696,7 @@ class Gateway(root: SparkSession) {
         else throw new IllegalArgumentException(
           s"A temporary object '$n' already exists in this session — drop it first")
       case s if TableEnv.isCreateTableWith(s) && upper.contains("WITH") =>
-        // a same-named session temporary table (plain relation, no SQL
-        // definition to re-run) must survive the binding's rebind — save
-        // its DataFrame and re-register it after
-        val plainShadow = CreateTableNameRe.findFirstMatchIn(s)
-          .map(_.group(1).replace("`", "").toLowerCase)
-          .filter(n => plainRelations.contains((viewScope(spark), n)))
-          .flatMap(n => try Some((n, spark.table(n))) catch { case _: Exception => None })
         val b = TableEnv.createTable(spark, s)
-        plainShadow.foreach { case (n, df) =>
-          try df.createOrReplaceTempView(n) catch { case _: Exception => () }
-        }
-        // createTable rebinds the materialization in THIS session — if this
-        // session holds a same-named temporary VIEW, the shadow must keep
-        // winning locally (temp objects shadow catalog objects), so restore
-        // its materialization over the binding's
-        if (TableEnv.viewDefExact(b.name, viewScope(spark)).isDefined)
-          TableEnv.viewMatSql(b.name, viewScope(spark)).foreach { sql =>
-            try spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW `${b.name}` AS " +
-              FlinkDialect.rewrite(sql))
-            catch { case _: Exception => () }
-          }
         // IF NOT EXISTS over an existing catalog VIEW no-ops inside
         // createTable without registering — don't claim a creation
         if (TableEnv.lookup(b.name).isEmpty)
@@ -898,6 +783,28 @@ class Gateway(root: SparkSession) {
       case _ if upper == "SHOW FULL MODULES" =>
         Rows(Seq("module name", "used"),
           modulesOf(spark).map { case (m, u) => Seq[Any](m, u) }.toSeq)
+      case ShowTablesRe(kind, ns, like) =>
+        // Spark lists the session's own objects (temporary views and
+        // tables, `dual`, catalog tables); where it lists the session
+        // catalog, which is where it lists temporary views, the shared
+        // registry joins the answer — it lives in no Spark catalog
+        val own = spark.sql(FlinkDialect.rewrite(stmt))
+        val rows = own.collect().toSeq.map(_.toSeq)
+        val catalog = Option(ns).map(_.replace("`", "").split('.').head)
+          .filter(c => c.equalsIgnoreCase("spark_catalog") ||
+            spark.conf.getOption(s"spark.sql.catalog.$c").isDefined)
+          .getOrElse(spark.catalog.currentCatalog())
+        val shared =
+          if (!catalog.equalsIgnoreCase("spark_catalog")) Nil
+          else (if (kind.equalsIgnoreCase("TABLES"))
+              TableEnv.bindings.values.map(b => b.name -> b.temporary).toSeq
+            else Nil) ++ TableEnv.catalogViews.keys.map(_ -> false)
+        val listed = rows.map(_(1).toString.toLowerCase).toSet
+        val names = shared.map(_._1).filterNot(listed)
+        val kept = Option(like).fold(names)(
+          org.apache.spark.sql.catalyst.util.StringUtils.filterPattern(names, _)).toSet
+        Rows(own.columns.toSeq, rows ++ shared.filter(o => kept(o._1))
+          .sortBy(_._1).map { case (n, temporary) => Seq[Any]("", n, temporary) })
       case LoadModuleRe(name) => loadModule(spark, name.toLowerCase)
       case UnloadModuleRe(name) => unloadModule(spark, name.toLowerCase)
       case UseModulesRe(list) => useModules(spark,
@@ -1144,9 +1051,10 @@ class Gateway(root: SparkSession) {
           Statement(s"Inserted into ${b.name}")
         }
       case CreateViewRe(orReplace, temp, ifNotExists, name, select) =>
-        // Flink views are catalog objects; the engine registry is in-memory,
-        // so both forms land as session temp views + a stored definition
-        // (F:77-90). The view body goes through the dialect layer.
+        // Flink views are catalog objects (F:77-90): the non-temporary form
+        // is only a registry definition that every session resolves at
+        // analysis; the TEMPORARY form is also this session's Spark temp
+        // view. The view body goes through the dialect layer.
         // Conflict semantics match Flink: plain CREATE on an existing view
         // fails, IF NOT EXISTS no-ops, only OR REPLACE redefines.
         val viewName = name.replace("`", "")
@@ -1161,8 +1069,7 @@ class Gateway(root: SparkSession) {
         // or any Spark-visible relation of that name.
         // the non-temporary form claims a CATALOG name: a binding of that
         // name blocks it even under OR REPLACE (Flink: "existing object is
-        // not a view") — the registry is cluster-wide, so tableExists on
-        // this session alone would miss bindings not yet materialized here
+        // not a view")
         if (temp == null && TableEnv.lookup(viewName).isDefined) {
           if (ifNotExists != null) Statement(s"View $viewName already exists (no-op)")
           else throw new IllegalArgumentException(
@@ -1187,40 +1094,32 @@ class Gateway(root: SparkSession) {
           else throw new IllegalArgumentException(
             s"View '$viewName' already exists — use CREATE OR REPLACE VIEW to redefine it")
         } else {
-          // a non-temporary CREATE OR REPLACE while THIS session holds a
-          // same-named temporary shadow must update only the catalog
-          // definition — the shadow's materialization keeps winning locally
-          // (it would otherwise show the catalog body under a TEMPORARY
-          // SHOW CREATE VIEW, the inconsistency shadowing exists to avoid)
-          val throughShadow =
-            temp == null && (TableEnv.viewDefExact(viewName, scope).isDefined ||
-              plainRelations.contains((scope, viewName.toLowerCase)))
           // capture the view's output columns at CREATE time (Flink stores
           // the EXPANDED query): `SELECT *` must not grow columns when the
           // underlying table later evolves. The wrap only applies when the
           // body's column names are unambiguous — but a body that does not
           // RESOLVE fails the CREATE itself (Flink validates view bodies).
-          // Previously the resolution failure was swallowed with the
-          // capture, so a CREATE whose materialization a local shadow
-          // suppressed (throughShadow below) registered an unvalidated,
-          // capture-less catalog definition over e.g. a dropped table
-          // (r15 soak NamespaceFuzzSpec find at 3x depth).
+          // A catalog view body is analyzed as the view itself, so one that
+          // reaches its own name fails here with the cycle error.
           val matSql = {
-            val cols = spark.sql(FlinkDialect.rewrite(select)).columns.toSeq
+            val body =
+              if (temp != null) spark.sql(FlinkDialect.rewrite(select))
+              else CatalogRelations.viewBody(spark, viewName, select)
+            val cols = body.columns.toSeq
             val distinct = cols.map(_.toLowerCase).distinct.size == cols.size
             if (cols.nonEmpty && distinct)
               Some("SELECT " + cols.map(c => s"`${c.replace("`", "``")}`")
                 .mkString(", ") + s" FROM (\n${select.trim}\n) __graft_view_body")
             else None
           }
-          if (!throughShadow)
+          if (temp != null) {
             spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW `$viewName` AS " +
               FlinkDialect.rewrite(matSql.getOrElse(select)))
-          TableEnv.registerView(viewName, select.trim, temp != null, scope, matSql)
-          // an explicit OR REPLACE over a plain temporary-table relation
-          // replaces it — the relation tracking must not outlive it
-          if (temp != null)
+            // an explicit OR REPLACE over a plain temporary-table relation
+            // replaces it — the relation tracking must not outlive it
             plainRelations.remove((scope, viewName.toLowerCase))
+          }
+          TableEnv.registerView(viewName, select.trim, temp != null, scope, matSql)
           Statement(s"View $viewName created")
         }
         }
@@ -1236,7 +1135,7 @@ class Gateway(root: SparkSession) {
         // session temporary tables resolve FIRST (Flink's temporary
         // namespace precedes the catalog), so DROP TEMPORARY TABLE drops
         // the local relation even when a binding shares the name — the
-        // shared object re-surfaces lazily on the next reference
+        // shared object resolves again on the next reference
         val n = target.replace("`", "").toLowerCase
         spark.catalog.dropTempView(n)
         plainRelations.remove((viewScope(spark), n))
@@ -1250,13 +1149,10 @@ class Gateway(root: SparkSession) {
           s"A temporary table '${target.replace("`", "")}' exists — " +
             "use DROP TEMPORARY TABLE to remove it")
       case DropTableRe(temp, ifExists, target) if TableEnv.lookup(target.replace("`", "")).isDefined =>
-        // DROP TABLE on a connector binding must remove the REGISTRY entry
-        // and every session's materialization — pre-r12, Spark's DROP TABLE
-        // only removed the current session's temp view, leaving the binding
-        // answering SHOW CREATE TABLE/DESCRIBE forever; with r12's lazy
-        // cross-session visibility it would even resurrect on reference.
-        // Keyword and binding temporariness must agree (Flink's
-        // CatalogManager refuses the cross-drop in both directions).
+        // DROP TABLE on a connector binding removes the REGISTRY entry, and
+        // with it the name every session resolves. Keyword and binding
+        // temporariness must agree (Flink's CatalogManager refuses the
+        // cross-drop in both directions).
         val n = target.replace("`", "").toLowerCase
         val b = TableEnv.lookup(n).get
         if ((temp != null) && !b.temporary) {
@@ -1271,15 +1167,6 @@ class Gateway(root: SparkSession) {
         if (b.distribution.isDefined)
           try spark.sql(s"DROP TABLE IF EXISTS ${TableEnv.bucketTableName(b)}")
           catch { case _: Exception => () }
-        TableEnv.openSessionSparks.foreach { sp =>
-          if (!locallyShadowed(sp, n))
-            try sp.catalog.dropTempView(n)
-            catch { case _: Exception => () }
-        }
-        // the caller may itself hold a temporary-view shadow of the name —
-        // DROP TABLE removes the TABLE, never the shadow
-        if (!locallyShadowed(spark, n))
-          spark.catalog.dropTempView(n)
         Statement(s"Table $n dropped")
         }
       case DropTableRe(_, _, target)
@@ -1288,9 +1175,7 @@ class Gateway(root: SparkSession) {
               viewScope(spark)).isDefined =>
         // the object exists but is a VIEW (catalog, or this session's
         // temporary) — Flink refuses the cross-kind drop even under IF
-        // EXISTS (the identifier is not absent, it is the wrong kind);
-        // delegating to Spark would silently destroy the view's local
-        // materialization while the definition lives on
+        // EXISTS (the identifier is not absent, it is the wrong kind)
         throw new IllegalArgumentException(
           s"'${target.replace("`", "")}' is a view — use DROP " +
             (if (TableEnv.viewDefExact(target.replace("`", "").toLowerCase, "").isDefined)
@@ -1325,9 +1210,7 @@ class Gateway(root: SparkSession) {
             !TableEnv.viewDefExact(target.replace("`", "").toLowerCase,
               viewScope(spark)).isDefined &&
             !TableEnv.viewDefExact(target.replace("`", "").toLowerCase, "").isDefined =>
-        // mirror guard: DROP VIEW on a table name — delegating to Spark
-        // would drop the binding's materialization in THIS session only,
-        // leaving a ghost that resurrects on the next reference
+        // mirror guard: DROP VIEW on a table name
         throw new IllegalArgumentException(
           s"'${target.replace("`", "")}' is a table — use DROP TABLE")
       case DropViewRe(temp, ifExists, target) =>
@@ -1339,21 +1222,11 @@ class Gateway(root: SparkSession) {
         val n = target.replace("`", "")
         if (temp != null) {
           if (TableEnv.dropView(n, viewScope(spark))) {
+            // a catalog view the temp view shadowed resolves again
             spark.catalog.dropTempView(n)
-            // un-shadow: if the dropped temp view shadowed a catalog view,
-            // restore the catalog view's materialization so SELECT agrees
-            // with what SHOW CREATE VIEW now advertises
-            if (TableEnv.viewDefExact(n, "").isDefined)
-              TableEnv.viewMatSql(n, "").foreach { sql =>
-                try spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW `$n` AS " +
-                  FlinkDialect.rewrite(sql))
-                catch { case _: Exception => () }
-              }
             Statement(s"View $n dropped")
           } else if (TableEnv.viewDefExact(n, "").isDefined) {
-            // the only local relation is this session's MATERIALIZATION of
-            // a catalog view — dropping it would silently break later
-            // SELECTs while SHOW CREATE VIEW still advertises the view
+            // no temporary view of the name, only the catalog view
             if (ifExists != null) Statement(s"View $n does not exist (no-op)")
             else throw new IllegalArgumentException(
               s"Temporary view '$n' does not exist in this session — " +
@@ -1368,24 +1241,9 @@ class Gateway(root: SparkSession) {
           throw new IllegalArgumentException(
             s"A temporary view '$n' exists in this session — " +
               "use DROP TEMPORARY VIEW to remove it")
-        else if (TableEnv.dropView(n, "")) {
-          // drop the materialization in EVERY open session (the view was a
-          // cluster object), sparing sessions whose own temporary shadow
-          // owns the name; forget the materialization-cache entries so a
-          // later re-CREATE re-materializes everywhere
-          TableEnv.openSessionSparks.foreach { sp =>
-            if (!locallyShadowed(sp, n))
-              try sp.catalog.dropTempView(n)
-              catch { case _: Exception => () }
-          }
-          materializedViews.keys.filter(_._2 == n.toLowerCase)
-            .foreach(materializedViews.remove)
-          // the caller may hold a plain temp-TABLE shadow of the name
-          // (a temp-VIEW shadow was refused earlier in this chain) —
-          // dropping the catalog view must not kill it
-          if (!locallyShadowed(spark, n)) spark.catalog.dropTempView(n)
+        else if (TableEnv.dropView(n, ""))
           Statement(s"View $n dropped")
-        } else {
+        else {
           // not engine-registered: delegate to Spark, rebuilt WITHOUT the
           // TEMPORARY keyword — Spark's grammar has no DROP TEMPORARY VIEW,
           // so re-running the raw Flink text would ParseException on the
@@ -1395,18 +1253,7 @@ class Gateway(root: SparkSession) {
         }
       case AlterSetRe(target, optStr) if TableEnv.lookup(target.replace("`", "")).isDefined =>
         val opts = OptRe.findAllMatchIn(optStr).map(x => x.group(1) -> x.group(2)).toMap
-        val b = TableEnv.alterOptions(spark, target.replace("`", ""), opts)
-        // alterOptions rebinds only HERE — drop the other sessions'
-        // materializations (sparing shadows) so their next reference
-        // re-materializes with the new options instead of serving
-        // pre-ALTER semantics forever (r12 review finding; the same
-        // stale-ghost class as DROP/RENAME). ALL live sessions, across
-        // gateway instances (r16).
-        TableEnv.openSessionSparks.foreach { sp =>
-          if ((sp ne spark) && !locallyShadowed(sp, b.name))
-            try sp.catalog.dropTempView(b.name)
-            catch { case _: Exception => () }
-        }
+        val b = TableEnv.alterOptions(target.replace("`", ""), opts)
         Statement(s"Table ${b.name} options updated (${opts.keys.mkString(", ")})")
       case AlterSchemaRe(target, verb, rest)
           if TableEnv.lookup(target.replace("`", "")).isDefined =>
@@ -1419,13 +1266,6 @@ class Gateway(root: SparkSession) {
             s"A temporary table '$tn' shadows the catalog table — " +
               "ALTER TABLE cannot address it; DROP TEMPORARY TABLE it first")
         val b = TableEnv.alterSchema(spark, tn, verb, rest)
-        // rebind only materialized HERE — drop the other sessions' stale
-        // materializations (sparing shadows), same class as ALTER SET
-        TableEnv.openSessionSparks.foreach { sp =>
-          if ((sp ne spark) && !locallyShadowed(sp, b.name))
-            try sp.catalog.dropTempView(b.name)
-            catch { case _: Exception => () }
-        }
         Statement(s"Table ${b.name} schema altered (${verb.toUpperCase})")
       case AlterRenameRe(from, to) if TableEnv.lookup(from.replace("`", "")).isDefined =>
         val fromN = from.replace("`", "").toLowerCase
@@ -1442,48 +1282,14 @@ class Gateway(root: SparkSession) {
           throw new IllegalArgumentException(
             s"A temporary table '$fromN' shadows the catalog table — " +
               "ALTER TABLE cannot address it; DROP TEMPORARY TABLE it first")
-        val renPlainShadows = Seq(toN)
-          .filter(nm => plainRelations.contains((viewScope(spark), nm)))
-          .flatMap(nm => try Some((nm, spark.table(nm))) catch { case _: Exception => None })
         val b = TableEnv.rename(spark, fromN, toN)
-        // the old name must die in EVERY session, not just this one —
-        // a stale materialization elsewhere is a readable ghost of a
-        // cluster object that no longer exists (same class as DROP TABLE)
-        TableEnv.openSessionSparks.foreach { sp =>
-          if ((sp ne spark) && !locallyShadowed(sp, fromN))
-            try sp.catalog.dropTempView(fromN)
-            catch { case _: Exception => () }
-        }
-        // rename rebinds the NEW name and drops the OLD name here — local
-        // temporary shadows of EITHER name must keep winning / survive
-        // (same restore as the CREATE TABLE route; without the fromN
-        // restore the caller's shadow materialization dies while SHOW
-        // CREATE VIEW still advertises it — r12 review finding). Plain
-        // temporary-table relations have no SQL body, so their DataFrames
-        // were saved above.
-        Seq(toN, fromN).foreach { nm =>
-          // restore from the MATERIALIZATION text (the schema-captured wrap
-          // when one exists) — restoring from the raw body re-expanded a
-          // star view's `*` against the evolved base, silently growing the
-          // shadow's captured schema (r15 soak find)
-          if (TableEnv.viewDefExact(nm, viewScope(spark)).isDefined)
-            TableEnv.viewMatSql(nm, viewScope(spark)).foreach { sql =>
-              try spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW `$nm` AS " +
-                FlinkDialect.rewrite(sql))
-              catch { case _: Exception => () }
-            }
-        }
-        renPlainShadows.foreach { case (nm, df) =>
-          try df.createOrReplaceTempView(nm) catch { case _: Exception => () }
-        }
         Statement(s"Table renamed to ${b.name}")
       case AlterRenameRe(from, _)
           if TableEnv.viewDefExact(from.replace("`", "").toLowerCase, "").isDefined ||
             locallyShadowed(spark, from.replace("`", "")) =>
         // not a binding but a known VIEW or session temporary table:
-        // delegating to Spark would rename the local materialization while
-        // the stored definition (or relation tracking) keeps the old name —
-        // a ghost in this session and a re-materialization in every other.
+        // delegating to Spark would rename a session relation while the
+        // stored definition (or relation tracking) keeps the old name.
         // Flink likewise refuses ALTER TABLE on temporary objects.
         throw new IllegalArgumentException(
           s"'${from.replace("`", "")}' is not an alterable table — " +
@@ -1504,6 +1310,13 @@ class Gateway(root: SparkSession) {
           (c.name, if (c.sparkType.isEmpty) "COMPUTED" else c.sparkType,
             "true", if (b.primaryKey.contains(c.name)) "PRI" else "", extras, wm)
         }.toDF("name", "type", "null", "key", "extras", "watermark"))
+      // a catalog view, or SHOW COLUMNS of any registry object, that the
+      // session has no relation of its own for: answer from the resolved
+      // plan's schema, as DESCRIBE QUERY does
+      case DescribeRe(target) if registryOnly(spark, target.replace("`", "")) =>
+        Finished(spark.sql(s"DESCRIBE QUERY SELECT * FROM $target"))
+      case ShowColumnsRe(target) if registryOnly(spark, target.replace("`", "")) =>
+        Rows(Seq("col_name"), spark.table(target).columns.toSeq.map(Seq(_)))
       case s if graft.operators.MatchRecognize.isMatchRecognize(s) =>
         Finished(graft.operators.MatchRecognize.sql(spark, s))
       case s if OptionsHintRe.findFirstIn(s).isDefined =>

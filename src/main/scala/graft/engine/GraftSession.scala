@@ -19,6 +19,12 @@ import org.apache.spark.sql.SparkSession
   * gw.executeScript(session, "CREATE TABLE t (...) WITH (...); SELECT ...")
   * }}}
   *
+  * `configure` also installs the [[CatalogRelations]] analyzer rule, which
+  * every session inherits through the builder's extensions, `newSession()`
+  * ones included: a name Spark cannot resolve that names a connector binding
+  * or a catalog view resolves to it at analysis time, so every session sees
+  * the whole shared registry and holds no copy of it.
+  *
   * Without libhadoop, Hadoop's stock local filesystem forks `chmod` and
   * `readlink` processes for every file create, mkdir and checkpoint rename,
   * about five per atomic checkpoint or state-store write, enough to dominate
@@ -32,6 +38,7 @@ object GraftSession {
 
   def configure(b: SparkSession.Builder): SparkSession.Builder = ForkFreeLocalFs.hadoopConf
     .foldLeft(b) { case (b0, (k, v)) => b0.config(s"spark.hadoop.$k", v) }
+    .withExtensions(_.injectResolutionRule(new CatalogRelations(_)))
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * A Flink CREATE TABLE is a connector binding, not a data copy. We parse the
   * DDL (columns incl. computed/`METADATA FROM`/watermark/PK/PARTITIONED BY,
-  * plus the WITH option map), keep the binding in a registry, and materialize
-  * it on demand:
+  * plus the WITH option map) and keep the binding in a registry that every
+  * session shares. No session holds a copy: a reference resolves at analysis
+  * time ([[CatalogRelations]]) to the DataFrame [[materializeDF]] builds:
   *   - `batchDF`  — bounded read (filesystem formats, datagen with
   *     number-of-rows, values);
   *   - `streamDF` — readStream (datagen→rate with synthesized typed columns,
@@ -63,15 +64,12 @@ object TableEnv {
   def bindings: Map[String, Binding] = registry.toMap
   def lookup(name: String): Option[Binding] = registry.get(name.toLowerCase)
   def drop(name: String): Boolean = registry.remove(name.toLowerCase).isDefined
-  /** Full reset — including the r16 SHARED registries (liveSessions,
-    * sessionScopes, plainRelations). Clearing only the binding/view maps
-    * left a gateway discarded without closeSession pinning its
-    * SparkSessions in liveSessions forever: every later DROP/RENAME/ALTER
-    * sweep iterated the dead sessions and the process leaked them (r16
-    * ADVICE). */
+  /** Full reset, including the per-session maps (sessionScopes,
+    * plainRelations): a gateway discarded without closeSession would
+    * otherwise pin its SparkSessions here forever. */
   def clear(): Unit = {
     registry.clear(); viewDefs.clear(); viewMatTexts.clear()
-    liveSessions.clear(); sessionScopes.clear(); plainRelations.clear()
+    sessionScopes.clear(); plainRelations.clear()
   }
 
   // ------------------------------------------------- views + ALTER TABLE --
@@ -137,24 +135,12 @@ object TableEnv {
       viewMatTexts.keys.filter(_._1 == scope).foreach(viewMatTexts.remove)
       plainRelations.keys.filter(_._1 == scope).foreach(plainRelations.remove)
     }
-  /** Shared (catalog) view definitions: name → SQL text. Gateway sessions
-    * other than the creator materialize these lazily on first reference
-    * (the binding-visibility mechanism, r12). */
+  /** Shared (catalog) view definitions: name → materialization text.
+    * Every session resolves these at analysis ([[CatalogRelations]]); SHOW
+    * TABLES and SHOW VIEWS list them. */
   def catalogViews: Map[String, String] =
     viewDefs.iterator.collect { case (("", n), (sql, _)) =>
       n -> viewMatTexts.getOrElse(("", n), sql) }.toMap
-
-  /** One session's TEMPORARY view definitions (materialization text), for
-    * the gateway's reachability closure: a statement can reach a binding
-    * THROUGH a temp view's body ("SELECT * FROM ns_y" where ns_y is
-    * `AS SELECT * FROM base`), and the base must be (re-)materialized in
-    * that session even though the statement never names it (r15
-    * NamespaceFuzzSpec find — a base table re-created after a DROP was
-    * unreachable through temp views in every other session). */
-  def scopeViews(scope: String): Map[String, String] =
-    if (scope.isEmpty) Map.empty
-    else viewDefs.iterator.collect { case ((s, n), (sql, _)) if s == scope =>
-      n -> viewMatTexts.getOrElse((s, n), sql) }.toMap
 
   // The ALTER verbs below are read-modify-write on the shared registry:
   // two concurrent alters of one table would otherwise both read the same
@@ -163,14 +149,13 @@ object TableEnv {
   // ddlLock; taking the same reentrant monitor here extends the guarantee
   // to direct TableEnv callers, like putIfAbsent does for creates.
 
-  /** ALTER TABLE t SET ('k'='v', ...) on a binding (F:96-98): merge options
-    * and refresh the materialized view so later reads see the change. */
-  def alterOptions(spark: SparkSession, name: String, opts: Map[String, String]): Binding = ddlLock.synchronized {
+  /** ALTER TABLE t SET ('k'='v', ...) on a binding (F:96-98): merge
+    * options; the next analysis in any session reads with them. */
+  def alterOptions(name: String, opts: Map[String, String]): Binding = ddlLock.synchronized {
     val b = lookup(name).getOrElse(
       throw new IllegalArgumentException(s"Unknown binding: $name"))
     val nb = b.copy(options = b.options ++ opts)
     registry.put(nb.name, nb)
-    rebind(spark, nb)
     nb
   }
 
@@ -365,7 +350,6 @@ object TableEnv {
     }
     val nb = b.copy(cols = cols, watermark = wm, primaryKey = pk)
     registry.put(nb.name, nb)
-    rebind(spark, nb)
     nb
   }
 
@@ -419,13 +403,12 @@ object TableEnv {
       spark.sql(s"ALTER TABLE ${bucketTableName(b)} RENAME TO ${bucketTableName(nb)}")
     registry.remove(b.name)
     registry.put(nb.name, nb)
-    spark.catalog.dropTempView(b.name)
-    rebind(spark, nb)
     nb
   }
 
-  /** The DataFrame a binding materializes as (batch or streaming per its
-    * connector nature); None for sink-only connectors or failed reads. */
+  /** The DataFrame a binding resolves to (batch or streaming per its
+    * connector nature), built fresh for each analysis; None for sink-only
+    * connectors or failed reads. */
   def materializeDF(spark: SparkSession, b: Binding): Option[DataFrame] = {
     def tryOpt(f: => DataFrame) = try Some(f) catch { case _: Exception => None }
     b.connector match {
@@ -439,69 +422,36 @@ object TableEnv {
     }
   }
 
-  /** Session SparkSession → temp-view scope id, SHARED across gateway
-    * instances. Until r15 this knowledge lived per-gateway behind a
-    * process-global probe hook the latest-constructed gateway owned — with
-    * two LIVE gateways a rebind in the older gateway's session missed its
-    * own shadows and could clobber them (r15 ADVICE). Keying the scope map
-    * and the plain-relation registry here makes shadow knowledge
-    * instance-independent: any gateway (and any direct TableEnv caller)
-    * consults the same state. Keyed by SparkSession OBJECT identity (the
-    * sessionModules precedent — identityHashCode alone can collide). */
+  /** Session SparkSession → temp-view scope id, shared across gateway
+    * instances so any gateway (and any direct TableEnv caller) answers the
+    * same DDL conflicts for a session. Keyed by SparkSession OBJECT
+    * identity (the sessionModules precedent — identityHashCode alone can
+    * collide). */
   private val sessionScopes = TrieMap.empty[SparkSession, String]
   def sessionScope(spark: SparkSession): String =
     sessionScopes.getOrElseUpdate(spark, java.util.UUID.randomUUID().toString)
   /** Drop a closing session's scope mapping; returns the scope it had. */
-  def releaseScope(spark: SparkSession): Option[String] = {
-    liveSessions.remove(spark)
-    sessionScopes.remove(spark)
-  }
-
-  /** Open gateway sessions, ACROSS gateway instances. The cross-session
-    * invalidation sweeps (DROP/RENAME/ALTER killing stale materializations,
-    * sparing shadows) must reach every live session — iterating only the
-    * executing gateway's own session map left the other instance serving
-    * pre-ALTER ghosts (r16 find, exposed by the two-gateway spec). */
-  private val liveSessions = TrieMap.empty[SparkSession, Unit]
-  def registerSession(spark: SparkSession): Unit = liveSessions.put(spark, ())
-  /** Live sessions only: a session whose SparkContext has STOPPED can never
-    * serve again, so it is evicted on sight (liveSessions + scope map +
-    * that scope's view/relation keys) — a crashed-or-stopped context whose
-    * gateway never called closeSession would otherwise pin the session and
-    * grow every future invalidation sweep (r16 ADVICE). */
-  def openSessionSparks: Iterable[SparkSession] =
-    liveSessions.keys.filter { s =>
-      val stopped =
-        try s.sparkContext.isStopped catch { case _: Exception => true }
-      if (stopped) releaseScope(s).foreach(dropScope)
-      !stopped
-    }
+  def releaseScope(spark: SparkSession): Option[String] = sessionScopes.remove(spark)
+  /** Test hook: sessions holding a scope — empty once every session that
+    * ran scoped DDL has closed. */
+  private[graft] def scopedSessions: Iterable[SparkSession] = sessionScopes.keys
 
   /** (scope, lowercase name) of connector-less CREATE TEMPORARY TABLE
     * relations — session objects with no SQL definition, so viewDefs can't
-    * carry them. Shadow checks consult this set too: like a temporary view,
-    * a temporary table SHADOWS the shared object of its name, and the
-    * per-reference binding refresh must not clobber it. Purged with the
-    * scope in [[dropScope]] and by DROP TEMPORARY TABLE. */
+    * carry them. Like a temporary view, a temporary table SHADOWS the
+    * shared object of its name, and Flink's DDL conflict answers depend on
+    * it. Purged with the scope in [[dropScope]] and by DROP TEMPORARY TABLE. */
   private[engine] val plainRelations = TrieMap.empty[(String, String), Unit]
 
   /** Does `spark`'s session hold a local object (temporary view or plain
-    * temporary table) SHADOWING `name`? Every rebind consults it — a
-    * binding re-materialization must never clobber a session shadow's
-    * materialization (r15 soak find: ALTER TABLE ns_x RENAME TO ns_z in a
-    * session holding temp view ns_z replaced the shadow's captured view
-    * with the renamed table's). Read-only scope lookup: a session that
-    * never ran scoped DDL has no scope and therefore no shadows. */
+    * temporary table) SHADOWING `name`? Decides the conflict answers of
+    * DDL that addresses a shadowed name. Read-only scope lookup: a session
+    * that never ran scoped DDL has no scope and therefore no shadows. */
   def locallyShadowed(spark: SparkSession, name: String): Boolean =
     sessionScopes.get(spark).exists { scope =>
       viewDefExact(name, scope).isDefined ||
         plainRelations.contains((scope, name.toLowerCase))
     }
-
-  /** Re-materialize a binding's session view after a definition change. */
-  private def rebind(spark: SparkSession, b: Binding): Unit =
-    if (!locallyShadowed(spark, b.name))
-      materializeDF(spark, b).foreach(_.createOrReplaceTempView(b.name))
 
   // ------------------------------------------------------------- parsing --
 
@@ -814,8 +764,6 @@ object TableEnv {
       temporary, distribution)
   }
 
-  /** Execute CREATE TABLE: parse, register, and (when batch-materializable)
-    * expose as a temp view so plain spark.sql can read it. */
   /** Split a trailing `LIKE base (modifiers)` clause off a CREATE TABLE
     * (depth-0 scan — LIKE inside a computed-column expression or a string
     * stays put). Returns (coreStmt, Option(baseName, modifiersUpper)). */
@@ -849,6 +797,8 @@ object TableEnv {
     (stmt, None)
   }
 
+  /** Execute CREATE TABLE ... WITH: parse and register the binding, which
+    * every session then resolves from the registry at analysis time. */
   def createTable(spark: SparkSession, stmt: String): Binding = {
     val (core0, like) = splitLike(stmt.trim.stripSuffix(";"))
     // LIKE form may omit the column block entirely — synthesize an empty one
@@ -949,10 +899,6 @@ object TableEnv {
           s"${if (winner.temporary) "TEMPORARY " else ""}TABLE it first " +
           "or use CREATE TABLE IF NOT EXISTS")
     }
-    // materialize a session view: unbounded datagen/kafka register their
-    // STREAMING df so SELECT plans a streaming query (§3.1); jdbc registers a
-    // live scan so later lookup joins see current dimension rows
-    rebind(spark, b)
     b
   }
 
@@ -1872,7 +1818,6 @@ object TableEnv {
         s"'${b.name}': PARTITIONED BY is not supported with format 'avro' " +
           "in this build — use parquet/orc for partitioned layouts")
       graft.sources.AvroFiles.write(df, b.options("path"), overwrite)
-      rebind(spark, b)
     case "filesystem" if b.distribution.isDefined =>
       // DISTRIBUTED BY → Spark bucketed external table at the binding's
       // path: rows hash to buckets on the distribution key and each bucket
@@ -1886,12 +1831,6 @@ object TableEnv {
         .mode(if (overwrite) "overwrite" else "append")
       (if (b.partitionedBy.nonEmpty) w.partitionBy(b.partitionedBy: _*) else w)
         .saveAsTable(bucketTableName(b))
-      // the binding's session view was materialized at CREATE TABLE time as
-      // a plain (then-empty) directory scan — the bucketed catalog table
-      // didn't exist yet. Refresh + rebind so SQL SELECTs resolve to the
-      // bucketed table (fresh listing AND the zero-shuffle join contract).
-      spark.catalog.refreshTable(bucketTableName(b))
-      rebind(spark, b)
     case "filesystem" =>
       val path = new org.apache.hadoop.fs.Path(b.options("path"))
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1978,10 +1917,6 @@ object TableEnv {
         (if (b.partitionedBy.nonEmpty) w.partitionBy(b.partitionedBy: _*) else w)
           .save(b.options("path"))
       }
-      // the binding's session view captured the directory's FILE LISTING
-      // when it was created (InMemoryFileIndex is fixed at load()) — rebind
-      // so the freshly written files are visible to subsequent SELECTs
-      rebind(spark, b)
     case "print" => df.show(numRows = 20, truncate = false)
     case "blackhole" => df.write.format("noop").mode("overwrite").save()
     case "elasticsearch-6" | "elasticsearch-7" =>
@@ -2285,10 +2220,7 @@ object TableEnv {
       // silently break the shuffle-free-join contract. Materialize the
       // rewritten rows first (we're overwriting the table being read), then
       // rewrite through the bucketed writer.
-      val materialized = df.localCheckpoint()
-      batchInsert(spark, b, materialized, overwrite = true)
-      spark.catalog.refreshTable(bucketTableName(b))
-      rebind(spark, b)
+      batchInsert(spark, b, df.localCheckpoint(), overwrite = true)
       return
     }
     val path = new org.apache.hadoop.fs.Path(b.options("path"))
@@ -2311,7 +2243,6 @@ object TableEnv {
     fs.rename(path, trash)
     fs.rename(tmp, path)
     fs.delete(trash, true)
-    rebind(spark, b)
   }
 
   /** A declared jdbc binding's database table exists only after the first

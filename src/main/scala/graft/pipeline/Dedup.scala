@@ -571,7 +571,7 @@ object Dedup {
     * explicit release the slices' disk blocks live until session end
     * (measured r18: 40 GB of block-manager scratch survived its gate).
     * Entries whose session's SparkContext has STOPPED are pruned on every
-    * map access (r19, verdict #2 — the r17 `openSessionSparks` precedent):
+    * map access (r19, verdict #2):
     * a stopped context's disk blocks are already gone, so the entry pins
     * only dead session objects and stale plans, and a gateway-style driver
     * that churns sessions through K-pass runs without calling the release
@@ -585,7 +585,7 @@ object Dedup {
     * across every suite, so a spec cannot stop a real context to walk the
     * eviction without killing its co-residents — production always runs
     * the default (the real `isStopped`, with a defensive true on a context
-    * that throws — same posture as `TableEnv.openSessionSparks`). */
+    * that throws). */
   @volatile private[graft] var kpassSessionStopped:
       org.apache.spark.sql.SparkSession => Boolean =
     s => try s.sparkContext.isStopped catch { case _: Throwable => true }

@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into Spark internals that are `private[sql]` in 4.x (the classic
   * Column ↔ Expression converters and the session function registry). Lives
@@ -22,6 +23,11 @@ object Shims {
       : org.apache.spark.sql.execution.SparkPlan =
     q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
       .streamingQuery.lastExecution.executedPlan
+
+  /** An analyzed, checked DataFrame over a logical plan. */
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Register a Catalyst expression builder as a SQL function name. */
   def registerFunction(spark: SparkSession, name: String,

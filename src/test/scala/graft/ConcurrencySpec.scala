@@ -847,16 +847,13 @@ class ConcurrencySpec extends SparkTestBase {
   test("TableEnv.clear resets the shared session registries (r16 ADVICE)") {
     // clear() pre-r17 reset only the binding/view maps: a gateway discarded
     // WITHOUT closeSession pinned its SparkSessions in the shared
-    // liveSessions registry forever — every later DROP/RENAME/ALTER
-    // invalidation sweep iterated the dead sessions, and a long-lived
-    // process leaked them.
+    // per-session state forever, and a long-lived process leaked them.
     import graft.engine.TableEnv
     val s2 = spark.newSession()
-    TableEnv.registerSession(s2)
     val scope = TableEnv.sessionScope(s2)
-    assert(TableEnv.openSessionSparks.exists(_ eq s2))
+    assert(TableEnv.scopedSessions.exists(_ eq s2))
     TableEnv.clear()
-    assert(!TableEnv.openSessionSparks.exists(_ eq s2),
+    assert(!TableEnv.scopedSessions.exists(_ eq s2),
       "clear() must evict registered sessions")
     assert(TableEnv.sessionScope(s2) != scope,
       "clear() must reset session scopes (a retained scope would leak its keys)")

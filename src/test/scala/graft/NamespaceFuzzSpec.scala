@@ -374,18 +374,16 @@ class NamespaceFuzzSpec extends SparkTestBase {
   test("session churn races scope release against cross-instance invalidation sweeps (r17)") {
     // The r16 split-topology fuzz holds its sessions STATIC. This variant
     // CLOSES one gateway's sessions mid-run while the OTHER gateway storms
-    // namespace DDL: every ALTER/DROP/RENAME sweeps EVERY live session of
-    // every instance (TableEnv.openSessionSparks), so each sweep races the
-    // closing sessions' releaseScope/dropScope. Invariants under ANY
-    // interleaving:
+    // namespace DDL on the shared registry, racing the closing sessions'
+    // releaseScope/dropScope. Invariants under ANY interleaving:
     //   (1) no internal error, no worker crash;
     //   (2) a LIVE churned-in session always reads its OWN temp-view shadow
     //       (count 1, its VALUES body) whatever the storm does to the
     //       shared name — a sweep must never clobber a shadow, and a scope
     //       release must never take another session's shadow with it;
-    //   (3) closed sessions leave nothing behind: after the storm the
-    //       shared live-session registry is EMPTY (the r16 ADVICE leak
-    //       class — pinned sessions would grow every later sweep).
+    //   (3) closed sessions leave nothing behind: after the storm no
+    //       session holds a scope in the shared per-session state (the
+    //       r16 ADVICE leak class).
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
     for (seed <- Seq(9101L, 9102L, 9103L)) {
       TableEnv.clear()
@@ -463,8 +461,8 @@ class NamespaceFuzzSpec extends SparkTestBase {
         s"seed $seed: ${failures.toArray.mkString("; ")}")
       assert(internal.isEmpty,
         s"seed $seed: internal errors:\n${internal.toArray.mkString("\n")}")
-      // (3) every session closed -> the shared registry must be empty
-      assert(TableEnv.openSessionSparks.isEmpty,
+      // (3) every session closed -> the shared per-session state is empty
+      assert(TableEnv.scopedSessions.isEmpty,
         s"seed $seed: closed sessions leaked in the live-session registry")
       // cleanup for the next seed
       val h = gwA.openSession("churn_cleanup")
@@ -476,20 +474,19 @@ class NamespaceFuzzSpec extends SparkTestBase {
   }
 
   test("session churn x TableEnv.clear(): full reset races eviction sweeps and scope release (r18)") {
-    // r17 made clear() reset the SHARED registries and openSessionSparks
-    // evict stopped sessions on sight; the r17 churn fuzz never crossed
-    // those paths. This variant adds a RESET thread that, mid-storm, walks
-    // the eviction path (openSessionSparks) and fires TableEnv.clear() —
-    // racing the storm's invalidation sweeps and the churn sessions' scope
-    // releases. Invariants under ANY interleaving:
-    //   (1) no internal error, no worker crash — a sweep iterating maps
+    // r17 made clear() reset the SHARED per-session registries; the r17
+    // churn fuzz never crossed that path. This variant adds a RESET thread
+    // that, mid-storm, walks the per-session scope map and fires
+    // TableEnv.clear() — racing the storm's DDL and the churn sessions'
+    // scope releases. Invariants under ANY interleaving:
+    //   (1) no internal error, no worker crash — a statement reading maps
     //       that clear() is wiping must degrade to a named error, never
     //       throw through;
     //   (2) a churned-in session's shadow probe reads 1 UNLESS a clear()
     //       fired after the shadow was created (clear wipes scopes BY
     //       CONTRACT; a wrong read with no intervening clear is a bug);
     //   (3) after the storm, with every session closed and a final clear,
-    //       the shared live-session registry is empty.
+    //       no session holds a scope.
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
     for (seed <- Seq(8201L, 8202L, 8203L)) {
       TableEnv.clear()
@@ -519,8 +516,7 @@ class NamespaceFuzzSpec extends SparkTestBase {
       val pool = Executors.newFixedThreadPool(4)
       val start = new CountDownLatch(1)
       val stormDone = new java.util.concurrent.atomic.AtomicBoolean(false)
-      // storm thread: gateway A churns the shared namespace (each op's
-      // invalidation sweep walks openSessionSparks — the eviction path)
+      // storm thread: gateway A churns the shared namespace
       pool.submit(new Runnable {
         def run(): Unit = try {
           start.await()
@@ -552,7 +548,7 @@ class NamespaceFuzzSpec extends SparkTestBase {
           val rnd = new Random(seed * 17)
           while (!stormDone.get()) {
             Thread.sleep((2 + rnd.nextInt(10)).toLong)
-            TableEnv.openSessionSparks.size: Unit // eviction-path walk
+            TableEnv.scopedSessions.size: Unit // scope-map walk
             if (rnd.nextInt(3) == 0) {
               val t0 = System.nanoTime()
               TableEnv.clear()
@@ -606,7 +602,7 @@ class NamespaceFuzzSpec extends SparkTestBase {
         s"seed $seed: internal errors:\n${internal.toArray.mkString("\n")}")
       // (3) everything closed + a final reset -> registry empty
       TableEnv.clear()
-      assert(TableEnv.openSessionSparks.isEmpty,
+      assert(TableEnv.scopedSessions.isEmpty,
         s"seed $seed: sessions survived close + clear")
       val h = gwA.openSession("clr_cleanup")
       Seq("DROP VIEW IF EXISTS clr_x", "DROP TABLE IF EXISTS clr_t",
