@@ -42,7 +42,7 @@ final class CatalogRelations(spark: SparkSession) extends Rule[LogicalPlan] {
         val chain = u.getTagValue(ViewChain).getOrElse(Nil)
         if (chain.exists(_.equalsIgnoreCase(name))) throw cycle(name :: chain)
         TableEnv.lookup(name).flatMap(bindingPlan)
-          .orElse(TableEnv.viewMatSql(name, "").map(viewPlan(spark, name, _, chain)))
+          .orElse(TableEnv.viewMatSql(name).map(viewPlan(spark, name, _, chain)))
           .map(p => SubqueryAlias(name, asTempView(name, p)))
           .getOrElse(u)
     }

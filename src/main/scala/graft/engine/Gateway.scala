@@ -2,6 +2,7 @@ package graft.engine
 
 import java.util.UUID
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -27,14 +28,37 @@ class Gateway(root: SparkSession) {
 
   // Bindings and catalog views live only in the shared TableEnv registry;
   // every session resolves them at analysis time (CatalogRelations), so no
-  // session holds a copy and no DDL has to reach other sessions. Session
-  // objects (TEMPORARY views, connector-less temporary tables) are Spark
-  // temp views and shadow shared names through Spark's resolution order;
-  // the TableEnv scope map and plain-relation registry, keyed per session,
-  // only decide Flink's DDL conflict answers.
+  // session holds a copy and no DDL has to reach other sessions. Everything
+  // else belongs to one Session and dies with it.
 
+  /** One gateway session and what it owns (sessionManager.ts): its
+    * TEMPORARY views and connector-less temporary tables — Spark temp views
+    * that shadow shared names through Spark's resolution order, recorded
+    * here to answer Flink's DDL conflicts and SHOW CREATE VIEW — its module
+    * list and its live result handles. All of it is read and written under
+    * the session's monitor; a handle is added, touched or evicted only
+    * while `open`. Nothing that routes, calls Spark or stops a job runs
+    * under the monitor. */
   final class Session(val handle: String, val spark: SparkSession) {
-    var alive = true
+    private[Gateway] var open = true
+    /** TEMPORARY views: lowercase name → Flink text */
+    private[Gateway] val tempViews = mutable.HashMap.empty[String, String]
+    /** connector-less temporary tables, lowercase */
+    private[Gateway] val tempTables = mutable.HashSet.empty[String]
+    /** loaded modules in resolution order → used */
+    private[Gateway] val modules = mutable.LinkedHashMap("core" -> true)
+    /** live result handles, oldest first */
+    private[Gateway] val ops = mutable.LinkedHashMap.empty[String, Operation]
+
+    def tempView(name: String): Option[String] = synchronized(tempViews.get(name.toLowerCase))
+    def tempTable(name: String): Boolean = synchronized(tempTables.contains(name.toLowerCase))
+    /** Does a temporary view or table of this session shadow `name`? */
+    def shadows(name: String): Boolean = synchronized {
+      val n = name.toLowerCase
+      tempViews.contains(n) || tempTables.contains(n)
+    }
+    /** estimated result bytes its live handles retain */
+    private[Gateway] def retainedBytes: Long = synchronized(ops.valuesIterator.map(_.retainedBytes).sum)
   }
 
   sealed trait OpResult
@@ -58,8 +82,7 @@ class Gateway(root: SparkSession) {
     def snapshot: (Long, Seq[Row]) = synchronized { (offset0, buf.toSeq) }
   }
 
-  final class Operation(val handle: String, val result: OpResult,
-      val session: String = "") {
+  final class Operation(val handle: String, val result: OpResult, val session: Session) {
     // Lazily-paged batch result: rows are pulled from `toLocalIterator` one
     // partition at a time as the client walks tokens — the driver never holds
     // more than the retention window of pages, no matter how large the
@@ -99,6 +122,8 @@ class Gateway(root: SparkSession) {
     * retention spec asserts this stays bounded under churn and empties on
     * closeSession). */
   private[graft] def liveOperationCount: Int = operations.size
+  /** Test hook: open sessions (empty once every session has closed). */
+  private[graft] def liveSessionCount: Int = sessions.size
 
   /** Test hook: (pages materialized so far, cached-page count, known total
     * page count). A bounded-memory paging spec asserts the iterator has NOT
@@ -110,48 +135,60 @@ class Gateway(root: SparkSession) {
   }
 
   private val sessions = TrieMap.empty[String, Session]
+  /** every live handle, for lookup by handle; changed only together with
+    * its session's `ops`, under that session's monitor */
   private val operations = TrieMap.empty[String, Operation]
-  /** per-session FIFO of issued op handles, for abandoned-op retention
-    * (see executeStatement) and closeSession purge */
-  private val sessionOps =
-    TrieMap.empty[String, java.util.concurrent.ConcurrentLinkedQueue[String]]
-  /** completed non-streaming operations retained per session before the
-    * oldest is auto-closed; a client that closeOperation()s promptly never
-    * notices (Flink's gateway expires idle operations the same way) */
+  /** live handles per session before the oldest completed non-streaming one
+    * is auto-closed; a client that closeOperation()s promptly never notices
+    * (Flink's gateway expires idle operations the same way) */
   val maxOpsPerSession = 512
   val pageSize = 1000
-  /** Per-session cap on ESTIMATED retained result bytes (r14): the
-    * 512-handle FIFO is count-based, so a few huge cached results could
-    * dodge it — the churn probe that sized the FIFO used tiny statements.
-    * Over the cap, the oldest completed non-streaming handles close first,
-    * always sparing the handle currently being served. */
+  /** Per-session cap on ESTIMATED retained result bytes (r14): the handle
+    * cap is count-based, so a few huge cached results could dodge it — the
+    * churn probe that sized it used tiny statements. */
   val maxRetainedBytesPerSession: Long = 64L * 1024 * 1024
 
   /** Test hook: estimated retained result bytes across a session's live
     * handles. */
-  private[graft] def sessionRetainedBytes(sessionHandle: String): Long = {
-    var t = 0L
-    sessionOps.get(sessionHandle).foreach(_.forEach(h =>
-      operations.get(h).foreach(t += _.retainedBytes)))
-    t
-  }
+  private[graft] def sessionRetainedBytes(sessionHandle: String): Long =
+    session(sessionHandle).retainedBytes
 
-  private def enforceSessionBytes(sessionHandle: String, keep: String): Unit =
-    sessionOps.get(sessionHandle).foreach { q =>
-      var total = sessionRetainedBytes(sessionHandle)
-      if (total > maxRetainedBytesPerSession) {
-        val it = q.iterator()
-        while (total > maxRetainedBytesPerSession && it.hasNext) {
-          val h = it.next()
-          if (h != keep) operations.get(h) match {
-            case Some(o) if !o.result.isInstanceOf[StreamingOp] =>
-              it.remove(); total -= o.retainedBytes; closeOperation(h)
-            case Some(_) => () // streaming handles fall with closeSession
-            case None => it.remove() // already client-closed
+  /** Makes `op` its session's newest handle: `add` registers a new one, a
+    * fetch (`add = false`) moves a still-live one — the liveness touch, so a
+    * result a client is paging is not evicted mid-pagination. Then the
+    * oldest non-streaming handles other than `op` close until the session
+    * is within both caps; streaming handles are live jobs a client may
+    * still be offset-fetching, and fall with closeSession. Returns whether
+    * `op` is live: false once the session has closed. */
+  private def retain(op: Operation, add: Boolean): Boolean = {
+    val s = op.session
+    val victims = ArrayBuffer.empty[Operation]
+    val live = s.synchronized {
+      val live = s.open && (s.ops.remove(op.handle).isDefined || add)
+      if (live) {
+        s.ops.put(op.handle, op); operations.put(op.handle, op)
+        var count = s.ops.size
+        var bytes = s.retainedBytes
+        val it = s.ops.valuesIterator
+        while ((count > maxOpsPerSession || bytes > maxRetainedBytesPerSession) && it.hasNext) {
+          val o = it.next()
+          if ((o ne op) && !o.result.isInstanceOf[StreamingOp]) {
+            victims += o; count -= 1; bytes -= o.retainedBytes
           }
         }
+        victims.foreach(unlink)
       }
+      live
     }
+    victims.foreach(release)
+    live
+  }
+
+  /** Removes `op` from the registry; the caller holds its session's monitor. */
+  private def unlink(op: Operation): Boolean = {
+    op.session.ops.remove(op.handle)
+    operations.remove(op.handle).isDefined
+  }
 
   /** metadata TTL cache + in-flight dedup (catalogProvider.ts:22-26,349-377);
     * keyed per session (temp views differ across sessions). */
@@ -173,33 +210,24 @@ class Gateway(root: SparkSession) {
     // every gateway session speaks the full surface and plans the same way
     val s = GraftSession.prepare(root.newSession())
     // 1-row scratch relation (the corpus SELECTs FROM dual, Oracle-style)
-    try s.sql("CREATE OR REPLACE TEMPORARY VIEW dual AS SELECT 1 AS dummy")
-    catch { case _: Exception => () }
+    s.sql("CREATE OR REPLACE TEMPORARY VIEW dual AS SELECT 1 AS dummy")
     sessions.put(handle, new Session(handle, s))
     handle
   }
 
+  /** Closes the session and every result handle it issued (streaming ones
+    * too — the JOBS keep running per Flink semantics and stay visible and
+    * stoppable through the shared jobs registry). Its temporary objects and
+    * modules go with the Session. */
   def closeSession(handle: String): Unit = {
-    // ORDER MATTERS: the handle must leave `sessions` BEFORE the sessionOps
-    // purge. executeStatement registers its op (resurrecting the queue via
-    // getOrElseUpdate) and then re-checks sessions.contains — with the old
-    // order (ops purged first) a statement racing between the two removals
-    // resurrected the queue while the re-check still saw the session live,
-    // leaking the op + queue permanently.
-    val removed = sessions.remove(handle)
-    // release every operation the session issued (streaming handles too —
-    // the JOBS keep running per Flink semantics and stay visible/stoppable
-    // via the cross-session jobs registry; only the result handles die)
-    sessionOps.remove(handle).foreach { q =>
-      q.forEach(h => if (operations.contains(h)) closeOperation(h))
-    }
-    removed.foreach { s =>
-      s.alive = false
-      sessionModules.remove(s.spark)
-      // purge this session's temp-view definitions with its scope — the
-      // UUID is unreachable after removal, so without this a long-lived
-      // gateway accumulates dead entries forever
-      TableEnv.releaseScope(s.spark).foreach(TableEnv.dropScope)
+    sessions.remove(handle).foreach { s =>
+      val handles = s.synchronized {
+        s.open = false
+        val all = s.ops.values.toList
+        all.foreach(unlink)
+        all
+      }
+      handles.foreach(release)
     }
     metaCache.invalidatePrefix(s"$handle::")
   }
@@ -389,11 +417,10 @@ class Gateway(root: SparkSession) {
   /** Execute one statement; returns an operation handle. */
   def executeStatement(sessionHandle: String, stmt0: String): String = {
     val sess = session(sessionHandle)
-    val spark = sess.spark
     val stmt = stmt0.trim.stripSuffix(";").trim
     if (MutatingRe.pattern.matcher(stmt).matches()) metaCache.invalidateAll()
     val result =
-      try routeCached(sessionHandle, spark, stmt)
+      try routeCached(sess, stmt)
       catch {
         case e: Exception => Failed(Results.rootCauseMessage(e))
         // a statement must never take the gateway down with a raw throw —
@@ -404,44 +431,14 @@ class Gateway(root: SparkSession) {
         case _: StackOverflowError =>
           Failed("statement too complex to analyze (stack depth exceeded)")
       }
-    val op = new Operation(UUID.randomUUID().toString, result, sessionHandle)
-    operations.put(op.handle, op)
+    val op = new Operation(UUID.randomUUID().toString, result, sess)
     // retention: a well-behaved client closeOperation()s each handle, but
     // an abandoning one (the reference's notebook on error paths) must not
     // grow the registry without bound — ~100 KB of retained plan/page state
     // per trivial statement (r13 churn probe: 4k SELECTs leaked ~380 MB).
-    // FIFO-evict this session's oldest NON-streaming completed operations
-    // over the cap; streaming handles stay (their jobs are live resources a
-    // client may still be offset-fetching — they fall with closeSession,
-    // the jobs themselves keep running per Flink semantics).
-    val mine = sessionOps.getOrElseUpdate(sessionHandle,
-      new java.util.concurrent.ConcurrentLinkedQueue[String])
-    mine.add(op.handle)
-    if (mine.size > maxOpsPerSession) {
-      val it = mine.iterator()
-      var evicted = false
-      while (!evicted && it.hasNext) {
-        val h = it.next()
-        val streaming = operations.get(h).exists(_.result.isInstanceOf[StreamingOp])
-        if (!streaming) {
-          it.remove()
-          if (operations.contains(h)) { closeOperation(h); evicted = true }
-          // already client-closed entries just drop from the queue
-        }
-      }
-    }
-    // eagerly-materialized Rows results (metadata pages, VALUES) count
-    // toward the byte cap the moment they register
-    enforceSessionBytes(sessionHandle, keep = op.handle)
-    // race with closeSession: if the purge ran between routing and the
-    // registry update above, this operation (and the resurrected sessionOps
-    // queue) would leak forever — no later closeSession will see them.
-    // Re-check and clean up on the losing side of the race.
-    if (!sessions.contains(sessionHandle)) {
-      sessionOps.remove(sessionHandle)
-        .foreach(_.forEach(h => if (operations.contains(h)) closeOperation(h)))
-      if (operations.contains(op.handle)) closeOperation(op.handle)
-    }
+    // Eagerly-materialized Rows results count toward the byte cap at once.
+    // A session closed while this statement ran gets no new handle.
+    if (!retain(op, add = true)) release(op)
     op.handle
   }
 
@@ -452,12 +449,12 @@ class Gateway(root: SparkSession) {
   /** Metadata statements fetch through the TTL cache (dedup'd); the rest
     * route normally. Specially-shaped metadata (Flink DESCRIBE of a binding,
     * SHOW CREATE) stays uncached — it reads the live registry for free. */
-  private def routeCached(sessionHandle: String, spark: SparkSession, stmt: String): OpResult =
+  private def routeCached(sess: Session, stmt: String): OpResult =
     stmt match {
       case MetaStmtRe(_*) if !TableEnv.lookup(
           DescribeRe.findFirstMatchIn(stmt).map(_.group(1).replace("`", "")).getOrElse("")).isDefined =>
-        val (cols, rows) = metaCache.getOrCompute(s"$sessionHandle::${stmt.toLowerCase}") {
-          route(spark, stmt) match {
+        val (cols, rows) = metaCache.getOrCompute(s"${sess.handle}::${stmt.toLowerCase}") {
+          route(sess, stmt) match {
             case Finished(df) => (df.columns.toSeq, df.collect().toSeq.map(_.toSeq))
             case Rows(c, r) => (c, r)
             case other => throw new IllegalStateException(
@@ -465,7 +462,7 @@ class Gateway(root: SparkSession) {
           }
         }
         Rows(cols, rows)
-      case _ => route(spark, stmt)
+      case _ => route(sess, stmt)
     }
 
   // ---------------------------------------------- completion resolution --
@@ -485,12 +482,12 @@ class Gateway(root: SparkSession) {
     * coalesces into one SHOW/DESCRIBE each (TTL + in-flight dedup). */
   def resolve(sessionHandle: String, linePrefix: String,
       sqlText: String = ""): Seq[(String, String)] = {
-    val spark = session(sessionHandle).spark
+    val sess = session(sessionHandle)
     // the NAME column: Spark-native listings carry (namespace, tableName,
     // isTemporary) / (namespace) — prefer the *name column over position
     def firstCol(stmt: String): Seq[String] =
       try {
-        val (cols, rs) = routeCached(sessionHandle, spark, stmt) match {
+        val (cols, rs) = routeCached(sess, stmt) match {
           case Rows(c, r) => (c, r)
           case Finished(df) => (df.columns.toSeq, df.collect().toSeq.map(_.toSeq))
           case _ => (Nil, Nil)
@@ -539,32 +536,21 @@ class Gateway(root: SparkSession) {
   // (or USE MODULES without) core drops those functions from the session
   // and a query calling SPLIT_INDEX fails to resolve until core returns.
   // `hive` (the only other stock Flink module) fails fast with its
-  // missing-runtime reason, the connector posture. Keyed by the
-  // SparkSession OBJECT (identity equals — SparkSession doesn't override
-  // equals), not identityHashCode: hash values are not unique, and a
-  // collision would silently fuse two sessions' registries. Entries are
-  // dropped in closeSession so a long-lived gateway doesn't accumulate
-  // dead registries.
-  private val sessionModules = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, scala.collection.mutable.LinkedHashMap[String, Boolean]]
-
-  private def modulesOf(spark: SparkSession) =
-    sessionModules.getOrElseUpdate(spark,
-      scala.collection.mutable.LinkedHashMap("core" -> true))
+  // missing-runtime reason, the connector posture. The list is the
+  // Session's; the function registry is re-synced after the monitor drops.
 
   /** Re-sync the session's function registry with core's used flag. */
-  private def syncCoreModule(spark: SparkSession,
-      mods: scala.collection.mutable.LinkedHashMap[String, Boolean]): Unit =
-    if (mods.getOrElse("core", false)) graft.functions.FlinkFunctions.registerAll(spark)
-    else graft.functions.FlinkFunctions.unregisterAll(spark)
+  private def syncCoreModule(sess: Session): Unit =
+    if (sess.synchronized(sess.modules.getOrElse("core", false)))
+      graft.functions.FlinkFunctions.registerAll(sess.spark)
+    else graft.functions.FlinkFunctions.unregisterAll(sess.spark)
 
-  private def loadModule(spark: SparkSession, name: String): OpResult = {
-    val mods = modulesOf(spark)
-    if (mods.contains(name))
+  private def loadModule(sess: Session, name: String): OpResult = {
+    if (sess.synchronized(sess.modules.contains(name)))
       throw new IllegalArgumentException(s"A module with name '$name' already exists")
     name match {
       case "core" =>
-        mods.put("core", true); syncCoreModule(spark, mods)
+        sess.synchronized(sess.modules.put("core", true)); syncCoreModule(sess)
         Statement("Module core loaded")
       case "hive" => throw new IllegalArgumentException(
         "module 'hive' needs a Hive runtime (flink-sql-connector-hive jar + " +
@@ -575,57 +561,37 @@ class Gateway(root: SparkSession) {
     }
   }
 
-  private def unloadModule(spark: SparkSession, name: String): OpResult = {
-    val mods = modulesOf(spark)
-    if (!mods.contains(name))
+  private def unloadModule(sess: Session, name: String): OpResult = {
+    if (sess.synchronized(sess.modules.remove(name)).isEmpty)
       throw new IllegalArgumentException(s"No module with name '$name' exists")
-    mods.remove(name)
-    if (name == "core") syncCoreModule(spark, mods)
+    if (name == "core") syncCoreModule(sess)
     Statement(s"Module $name unloaded")
   }
 
-  private def useModules(spark: SparkSession, names: Seq[String]): OpResult = {
-    val mods = modulesOf(spark)
+  private def useModules(sess: Session, names: Seq[String]): OpResult = {
     val dup = names.diff(names.distinct)
     if (dup.nonEmpty) throw new IllegalArgumentException(
       s"Module '${dup.head}' appears more than once in USE MODULES")
-    names.find(!mods.contains(_)).foreach(m =>
-      throw new IllegalArgumentException(s"No module with name '$m' exists"))
-    // USE order becomes resolution (and SHOW MODULES) order; loaded-but-
-    // unlisted modules stay loaded with used=false (Flink semantics)
-    val rebuilt = scala.collection.mutable.LinkedHashMap.empty[String, Boolean]
-    names.foreach(m => rebuilt.put(m, true))
-    mods.keys.foreach(m => if (!rebuilt.contains(m)) rebuilt.put(m, false))
-    mods.clear(); rebuilt.foreach { case (k, v) => mods.put(k, v) }
-    syncCoreModule(spark, mods)
+    sess.synchronized {
+      val mods = sess.modules
+      names.find(!mods.contains(_)).foreach(m =>
+        throw new IllegalArgumentException(s"No module with name '$m' exists"))
+      // USE order becomes resolution (and SHOW MODULES) order; loaded-but-
+      // unlisted modules stay loaded with used=false (Flink semantics)
+      val unlisted = mods.keys.filterNot(names.contains).toList
+      mods.clear()
+      names.foreach(mods.put(_, true))
+      unlisted.foreach(mods.put(_, false))
+    }
+    syncCoreModule(sess)
     Statement(s"Modules in use: ${names.mkString(", ")}")
   }
-
-  /** TEMPORARY-view definition scope: a UUID per session SparkSession
-    * OBJECT — held in the SHARED TableEnv map so concurrent gateways see
-    * one consistent scope per session. Entries drop in closeSession. */
-  private def viewScope(spark: SparkSession): String =
-    TableEnv.sessionScope(spark)
-  /** The temp-view scope id of an open session — introspection for the
-    * close-purges-definitions contract (ConcurrencySpec). */
-  def viewScopeOf(handle: String): String = viewScope(session(handle).spark)
-
-  /** (session scope, name) of connector-less CREATE TEMPORARY TABLE
-    * relations — the SHARED TableEnv registry: like a temporary view, a
-    * temporary table SHADOWS the shared object of its name. Purged with the
-    * scope (closeSession → dropScope) and by DROP TEMPORARY TABLE. */
-  private def plainRelations = TableEnv.plainRelations
-
-  /** Does `sess` hold a session-local object (temp-view definition or
-    * plain temporary-table relation) shadowing `name`? */
-  private def locallyShadowed(sess: SparkSession, name: String): Boolean =
-    TableEnv.locallyShadowed(sess, name)
 
   /** A binding or catalog view that `spark` reaches only through the
     * analyzer rule: no session temp object or Spark catalog table of the
     * name. Spark's relation commands (DESCRIBE, SHOW COLUMNS) cannot see it. */
   private def registryOnly(spark: SparkSession, name: String): Boolean =
-    (TableEnv.lookup(name).isDefined || TableEnv.viewDefExact(name, "").isDefined) &&
+    (TableEnv.lookup(name).isDefined || TableEnv.viewDef(name).isDefined) &&
       !spark.catalog.tableExists(name)
 
   /** Column-list / VALUES INSERT alignment (reference corpus F:176-177):
@@ -675,17 +641,18 @@ class Gateway(root: SparkSession) {
   private val NamespaceDdlRe =
     """(?is)^\s*(?:CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMPORARY\s+)?(?:TABLE|VIEW)|DROP\s+(?:TEMPORARY\s+)?(?:TABLE|VIEW)|ALTER\s+TABLE)\b.*""".r
 
-  private def route(spark: SparkSession, stmt: String): OpResult =
+  private def route(sess: Session, stmt: String): OpResult =
     if (NamespaceDdlRe.pattern.matcher(stmt).matches())
-      TableEnv.ddlLock.synchronized(route0(spark, stmt))
-    else route0(spark, stmt)
+      TableEnv.ddlLock.synchronized(route0(sess, stmt))
+    else route0(sess, stmt)
 
-  private def route0(spark: SparkSession, stmt: String): OpResult = {
+  private def route0(sess: Session, stmt: String): OpResult = {
+    val spark = sess.spark
     val upper = stmt.toUpperCase
     stmt match {
       case s if TableEnv.isCreateTableWith(s) &&
           CreateTempTableNameRe.findFirstMatchIn(s).exists(m =>
-            locallyShadowed(spark, m.group(1).replace("`", ""))) =>
+            sess.shadows(m.group(1).replace("`", ""))) =>
         // CREATE TEMPORARY TABLE ... WITH when this session's temporary
         // namespace already holds the name (a plain relation or a temp
         // view): one session namespace, Flink's conflict rules
@@ -719,9 +686,7 @@ class Gateway(root: SparkSession) {
           // Flink conflict semantics for the session temporary namespace
           // (one namespace for temp tables AND temp views): plain
           // re-CREATE refuses, IF NOT EXISTS no-ops
-          if (plainRelations.contains((viewScope(spark), rel)) ||
-              TableEnv.viewDefExact(rel, viewScope(spark)).isDefined ||
-              TableEnv.lookup(rel).exists(_.temporary)) {
+          if (sess.shadows(rel) || TableEnv.lookup(rel).exists(_.temporary)) {
             if (IfNotExistsRe.findFirstIn(s).isDefined)
               Statement(s"Table $rel already exists (no-op)")
             else throw new IllegalArgumentException(
@@ -731,7 +696,7 @@ class Gateway(root: SparkSession) {
             val schema = org.apache.spark.sql.types.StructType.fromDDL(b.schemaDdl)
             spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
               .createOrReplaceTempView(rel)
-            plainRelations.put((viewScope(spark), rel), ())
+            sess.synchronized(sess.tempTables += rel)
             Statement(s"Temporary table ${b.name} created (empty typed relation)$note")
           }
         } else {
@@ -778,11 +743,11 @@ class Gateway(root: SparkSession) {
         { import spark.implicits._
           Finished(spark.sparkContext.listJars().toSeq.toDF("jar")) }
       case _ if upper == "SHOW MODULES" =>
-        Rows(Seq("module name"),
-          modulesOf(spark).collect { case (m, true) => Seq[Any](m) }.toSeq)
+        Rows(Seq("module name"), sess.synchronized(
+          sess.modules.collect { case (m, true) => Seq[Any](m) }.toSeq))
       case _ if upper == "SHOW FULL MODULES" =>
-        Rows(Seq("module name", "used"),
-          modulesOf(spark).map { case (m, u) => Seq[Any](m, u) }.toSeq)
+        Rows(Seq("module name", "used"), sess.synchronized(
+          sess.modules.map { case (m, u) => Seq[Any](m, u) }.toSeq))
       case ShowTablesRe(kind, ns, like) =>
         // Spark lists the session's own objects (temporary views and
         // tables, `dual`, catalog tables); where it lists the session
@@ -805,9 +770,9 @@ class Gateway(root: SparkSession) {
           org.apache.spark.sql.catalyst.util.StringUtils.filterPattern(names, _)).toSet
         Rows(own.columns.toSeq, rows ++ shared.filter(o => kept(o._1))
           .sortBy(_._1).map { case (n, temporary) => Seq[Any]("", n, temporary) })
-      case LoadModuleRe(name) => loadModule(spark, name.toLowerCase)
-      case UnloadModuleRe(name) => unloadModule(spark, name.toLowerCase)
-      case UseModulesRe(list) => useModules(spark,
+      case LoadModuleRe(name) => loadModule(sess, name.toLowerCase)
+      case UnloadModuleRe(name) => unloadModule(sess, name.toLowerCase)
+      case UseModulesRe(list) => useModules(sess,
         list.split(",").map(_.trim.replace("`", "").toLowerCase).toSeq)
       case _ if upper.startsWith("REMOVE JAR") =>
         Statement("REMOVE JAR is unsupported — a Spark session cannot unload a jar once added")
@@ -946,7 +911,7 @@ class Gateway(root: SparkSession) {
         var batchDone = 0
         val handles = stmts.zipWithIndex.map { case (s0, i) =>
           try {
-            val r = route(spark, s0.stripSuffix(";"))
+            val r = route(sess, s0.stripSuffix(";"))
             r match {
               case Statement(m) =>
                 "Job (\\S+) started".r.findFirstMatchIn(m)
@@ -1016,7 +981,7 @@ class Gateway(root: SparkSession) {
         require(lines.length >= 2 && lines(0).startsWith("GRAFT COMPILED PLAN"),
           s"Not a compiled plan file: $path")
         val stmtStored = new String(java.util.Base64.getDecoder.decode(lines(1)), "UTF-8")
-        route(spark, stmtStored.trim.stripSuffix(";"))
+        route(sess, stmtStored.trim.stripSuffix(";"))
       case InsertIntoRe(target, select) if TableEnv.lookup(target.replace("`", "")).isDefined =>
         val b = TableEnv.lookup(target.replace("`", "")).get
         // positional alignment: the query's column names must NOT reach the
@@ -1058,15 +1023,12 @@ class Gateway(root: SparkSession) {
         // Conflict semantics match Flink: plain CREATE on an existing view
         // fails, IF NOT EXISTS no-ops, only OR REPLACE redefines.
         val viewName = name.replace("`", "")
-        // TEMPORARY view definitions are scoped to this gateway session
-        // (its SparkSession identity): another session's same-named temp
-        // view must neither conflict here nor be visible to this one
-        val scope = viewScope(spark)
-        // TEMPORARY form: only a conflict in THIS session's scope blocks —
-        // a temporary view may shadow a same-named catalog view (Flink
-        // semantics; the "" fallback wrongly rejected the shadow pre-r12).
-        // Non-temporary form: conflicts with the shared catalog definition
-        // or any Spark-visible relation of that name.
+        // TEMPORARY form: only a conflict in THIS session's temporary
+        // namespace blocks — another session's same-named temp view is not
+        // visible here, and a temporary view may shadow a same-named catalog
+        // view (Flink semantics). Non-temporary form: conflicts with the
+        // shared catalog definition or any Spark-visible relation of that
+        // name.
         // the non-temporary form claims a CATALOG name: a binding of that
         // name blocks it even under OR REPLACE (Flink: "existing object is
         // not a view")
@@ -1078,16 +1040,15 @@ class Gateway(root: SparkSession) {
         } else {
         val exists =
           if (temp != null)
-            TableEnv.viewDefExact(viewName, scope).isDefined ||
-              // a same-session relation (a connector-less CREATE TEMPORARY
-              // TABLE, or a raw createTempView not made through the
-              // gateway) owns the name too — only a SHARED object
-              // (binding / catalog view) may be shadowed without OR REPLACE
-              plainRelations.contains((scope, viewName.toLowerCase)) ||
+            // a same-session relation (a connector-less CREATE TEMPORARY
+            // TABLE, or a raw createTempView not made through the gateway)
+            // owns the name too — only a SHARED object (binding / catalog
+            // view) may be shadowed without OR REPLACE
+            sess.shadows(viewName) ||
               (spark.catalog.tableExists(viewName) &&
                 TableEnv.lookup(viewName).isEmpty &&
-                TableEnv.viewDefExact(viewName, "").isEmpty)
-          else TableEnv.viewDefExact(viewName, "").isDefined ||
+                TableEnv.viewDef(viewName).isEmpty)
+          else TableEnv.viewDef(viewName).isDefined ||
             spark.catalog.tableExists(viewName)
         if (exists && orReplace == null) {
           if (ifNotExists != null) Statement(s"View $viewName already exists (no-op)")
@@ -1115,34 +1076,32 @@ class Gateway(root: SparkSession) {
           if (temp != null) {
             spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW `$viewName` AS " +
               FlinkDialect.rewrite(matSql.getOrElse(select)))
-            // an explicit OR REPLACE over a plain temporary-table relation
-            // replaces it — the relation tracking must not outlive it
-            plainRelations.remove((scope, viewName.toLowerCase))
-          }
-          TableEnv.registerView(viewName, select.trim, temp != null, scope, matSql)
+            // an explicit OR REPLACE over a temporary table replaces it
+            val n = viewName.toLowerCase
+            sess.synchronized { sess.tempTables -= n; sess.tempViews.put(n, select.trim) }
+          } else TableEnv.registerView(viewName, select.trim, materializeSql = matSql)
           Statement(s"View $viewName created")
         }
         }
       case ShowCreateViewRe(target) =>
-        TableEnv.viewDef(target.replace("`", ""), viewScope(spark)) match {
+        val n = target.replace("`", "")
+        sess.tempView(n).map(_ -> true).orElse(TableEnv.viewDef(n).map(_ -> false)) match {
           case Some((sql, temp)) => Statement(
-            s"CREATE ${if (temp) "TEMPORARY " else ""}VIEW `${target.replace("`", "")}` AS $sql")
+            s"CREATE ${if (temp) "TEMPORARY " else ""}VIEW `$n` AS $sql")
           case None => Finished(spark.sql(s"SHOW CREATE TABLE $target"))
         }
       case DropTableRe(temp, _, target)
-          if temp != null && plainRelations.contains(
-            (viewScope(spark), target.replace("`", "").toLowerCase)) =>
+          if temp != null && sess.tempTable(target.replace("`", "")) =>
         // session temporary tables resolve FIRST (Flink's temporary
         // namespace precedes the catalog), so DROP TEMPORARY TABLE drops
         // the local relation even when a binding shares the name — the
         // shared object resolves again on the next reference
         val n = target.replace("`", "").toLowerCase
         spark.catalog.dropTempView(n)
-        plainRelations.remove((viewScope(spark), n))
+        sess.synchronized(sess.tempTables -= n)
         Statement(s"Table $n dropped")
       case DropTableRe(temp, _, target)
-          if temp == null && plainRelations.contains(
-            (viewScope(spark), target.replace("`", "").toLowerCase)) =>
+          if temp == null && sess.tempTable(target.replace("`", "")) =>
         // plain DROP TABLE through a session temporary table: the same
         // unconditional refusal as through a temporary binding
         throw new IllegalArgumentException(
@@ -1170,15 +1129,14 @@ class Gateway(root: SparkSession) {
         Statement(s"Table $n dropped")
         }
       case DropTableRe(_, _, target)
-          if TableEnv.viewDefExact(target.replace("`", "").toLowerCase, "").isDefined ||
-            TableEnv.viewDefExact(target.replace("`", "").toLowerCase,
-              viewScope(spark)).isDefined =>
+          if TableEnv.viewDef(target.replace("`", "")).isDefined ||
+            sess.tempView(target.replace("`", "")).isDefined =>
         // the object exists but is a VIEW (catalog, or this session's
         // temporary) — Flink refuses the cross-kind drop even under IF
         // EXISTS (the identifier is not absent, it is the wrong kind)
         throw new IllegalArgumentException(
           s"'${target.replace("`", "")}' is a view — use DROP " +
-            (if (TableEnv.viewDefExact(target.replace("`", "").toLowerCase, "").isDefined)
+            (if (TableEnv.viewDef(target.replace("`", "")).isDefined)
               "VIEW" else "TEMPORARY VIEW"))
       case DropTableRe(temp, ifExists, target) if temp != null =>
         // TEMPORARY form with no registered object: Spark has no DROP
@@ -1187,17 +1145,15 @@ class Gateway(root: SparkSession) {
         // TEMPORARY TABLE lands as a plain session relation (not in the
         // registry) — dropTempView is exactly its drop.
         val n = target.replace("`", "")
-        if (spark.catalog.dropTempView(n)) {
-          plainRelations.remove((viewScope(spark), n.toLowerCase))
+        if (spark.catalog.dropTempView(n))
           Statement(s"Table $n dropped")
-        } else if (ifExists != null)
+        else if (ifExists != null)
           Statement(s"Table $n does not exist (no-op)")
         else throw new IllegalArgumentException(
           s"Temporary table '$n' does not exist")
       case DropViewRe(_, _, target)
-          if plainRelations.contains(
-            (viewScope(spark), target.replace("`", "").toLowerCase)) &&
-            TableEnv.viewDefExact(target.replace("`", "").toLowerCase, "").isEmpty =>
+          if sess.tempTable(target.replace("`", "")) &&
+            TableEnv.viewDef(target.replace("`", "")).isEmpty =>
         // DROP [TEMPORARY] VIEW on a session temporary TABLE — cross-kind.
         // When a catalog VIEW of the name ALSO exists behind the shadow,
         // fall through: DROP VIEW targets the catalog object (Flink's kind
@@ -1207,25 +1163,23 @@ class Gateway(root: SparkSession) {
           s"'${target.replace("`", "")}' is a table — use DROP TEMPORARY TABLE")
       case DropViewRe(_, _, target)
           if TableEnv.lookup(target.replace("`", "")).isDefined &&
-            !TableEnv.viewDefExact(target.replace("`", "").toLowerCase,
-              viewScope(spark)).isDefined &&
-            !TableEnv.viewDefExact(target.replace("`", "").toLowerCase, "").isDefined =>
+            sess.tempView(target.replace("`", "")).isEmpty &&
+            TableEnv.viewDef(target.replace("`", "")).isEmpty =>
         // mirror guard: DROP VIEW on a table name
         throw new IllegalArgumentException(
           s"'${target.replace("`", "")}' is a table — use DROP TABLE")
       case DropViewRe(temp, ifExists, target) =>
-        // Scope-exact semantics (Flink's): DROP TEMPORARY VIEW removes only
-        // THIS session's (scope, name) definition; plain DROP VIEW removes
-        // only the shared catalog ("", name) definition. The pre-r12
-        // fallback let any session's DROP TEMPORARY VIEW erase a shared
-        // catalog view visible to every other session.
+        // Kind-exact semantics (Flink's): DROP TEMPORARY VIEW removes only
+        // THIS session's temporary view; plain DROP VIEW removes only the
+        // shared catalog view. The pre-r12 fallback let any session's DROP
+        // TEMPORARY VIEW erase a catalog view visible to every other session.
         val n = target.replace("`", "")
         if (temp != null) {
-          if (TableEnv.dropView(n, viewScope(spark))) {
+          if (sess.synchronized(sess.tempViews.remove(n.toLowerCase)).isDefined) {
             // a catalog view the temp view shadowed resolves again
             spark.catalog.dropTempView(n)
             Statement(s"View $n dropped")
-          } else if (TableEnv.viewDefExact(n, "").isDefined) {
+          } else if (TableEnv.viewDef(n).isDefined) {
             // no temporary view of the name, only the catalog view
             if (ifExists != null) Statement(s"View $n does not exist (no-op)")
             else throw new IllegalArgumentException(
@@ -1235,13 +1189,13 @@ class Gateway(root: SparkSession) {
             Statement(s"View $n dropped")
           else throw new IllegalArgumentException(
             s"Temporary view '$n' does not exist in this session")
-        } else if (TableEnv.viewDefExact(n, viewScope(spark)).isDefined)
+        } else if (sess.tempView(n).isDefined)
           // Flink refuses to DROP VIEW through a temporary view of the same
           // name — the caller must say which object they mean
           throw new IllegalArgumentException(
             s"A temporary view '$n' exists in this session — " +
               "use DROP TEMPORARY VIEW to remove it")
-        else if (TableEnv.dropView(n, ""))
+        else if (TableEnv.dropView(n))
           Statement(s"View $n dropped")
         else {
           // not engine-registered: delegate to Spark, rebuilt WITHOUT the
@@ -1261,7 +1215,7 @@ class Gateway(root: SparkSession) {
         // temporary namespace resolves FIRST — same refusal as RENAME/SET:
         // ALTER TABLE must not silently edit the catalog object behind a
         // temp-table shadow
-        if (plainRelations.contains((viewScope(spark), tn)))
+        if (sess.tempTable(tn))
           throw new IllegalArgumentException(
             s"A temporary table '$tn' shadows the catalog table — " +
               "ALTER TABLE cannot address it; DROP TEMPORARY TABLE it first")
@@ -1271,22 +1225,22 @@ class Gateway(root: SparkSession) {
         val fromN = from.replace("`", "").toLowerCase
         val toN = to.replace("`", "").toLowerCase
         // Flink refuses to rename onto an existing object
-        if (TableEnv.lookup(toN).isDefined || TableEnv.viewDefExact(toN, "").isDefined)
+        if (TableEnv.lookup(toN).isDefined || TableEnv.viewDef(toN).isDefined)
           throw new IllegalArgumentException(
             s"Could not rename: an object named '$toN' already exists")
         // temporary namespace resolves FIRST: a plain temp TABLE shadowing
         // fromN means ALTER TABLE addresses the temporary object — refuse,
         // exactly as DROP TABLE does in the same state (a temp VIEW shadow
         // does not block table verbs)
-        if (plainRelations.contains((viewScope(spark), fromN)))
+        if (sess.tempTable(fromN))
           throw new IllegalArgumentException(
             s"A temporary table '$fromN' shadows the catalog table — " +
               "ALTER TABLE cannot address it; DROP TEMPORARY TABLE it first")
         val b = TableEnv.rename(spark, fromN, toN)
         Statement(s"Table renamed to ${b.name}")
       case AlterRenameRe(from, _)
-          if TableEnv.viewDefExact(from.replace("`", "").toLowerCase, "").isDefined ||
-            locallyShadowed(spark, from.replace("`", "")) =>
+          if TableEnv.viewDef(from.replace("`", "")).isDefined ||
+            sess.shadows(from.replace("`", "")) =>
         // not a binding but a known VIEW or session temporary table:
         // delegating to Spark would rename a session relation while the
         // stored definition (or relation tracking) keeps the old name.
@@ -1341,10 +1295,10 @@ class Gateway(root: SparkSession) {
             TableEnv.materializeDF(spark, nb) match {
               case Some(df) =>
                 df.createOrReplaceTempView(shadow)
-                route(spark, substituteTable(stripped, b.name, shadow))
-              case None => route(spark, stripped)
+                route(sess, substituteTable(stripped, b.name, shadow))
+              case None => route(sess, stripped)
             }
-          case _ => route(spark, stripped)
+          case _ => route(sess, stripped)
         }
       case s if graft.operators.AsOfJoin.isTemporalSql(s) =>
         // versioned temporal join → carry-forward as-of; unresolvable version
@@ -1701,22 +1655,7 @@ class Gateway(root: SparkSession) {
   def fetchResults(opHandle: String, token: Int): Page = {
     val op = operations.getOrElse(opHandle,
       throw new IllegalStateException(s"Operation does not exist: $opHandle"))
-    // liveness touch: retention evicts from the head of the session's FIFO,
-    // so a large result a client is still token-paging must move to the tail
-    // on each fetch — otherwise 512 newer statements in the same session
-    // auto-close it mid-pagination and the next fetch throws
-    sessionOps.get(op.session).foreach { q =>
-      if (q.remove(opHandle)) {
-        q.add(opHandle)
-        // the remove/add pair is non-atomic: a closeSession purging the
-        // queue while the handle was detached never saw it, so it would
-        // never be closed — re-check and close on the losing side (the
-        // local `op` reference still serves this final page fine)
-        if (!sessions.contains(op.session) && operations.contains(opHandle))
-          closeOperation(opHandle)
-      }
-    }
-    op.result match {
+    val page = op.result match {
       case Failed(err) =>
         Page(Seq("error"), if (token == 0) Seq(Seq(err)) else Nil, None, eos = true)
       case Statement(msg) =>
@@ -1732,7 +1671,6 @@ class Gateway(root: SparkSession) {
         // statement, never escape fetchResults as a raw executor exception
         try {
           val rows = op.synchronized(batchPage(op, df, token))
-          enforceSessionBytes(op.session, keep = opHandle)
           val eos = op.pageCount.exists(token + 1 >= _)
           Page(op.resultColumns, rows, if (eos) None else Some(token + 1), eos)
         } catch {
@@ -1746,6 +1684,11 @@ class Gateway(root: SparkSession) {
         Page(cols, rows.drop((token - offset).toInt.max(0)).map(_.toSeq),
           Some((offset + rows.size).toInt), eos = false)
     }
+    // liveness touch, after the page so its cached bytes count: eviction
+    // takes the oldest handles first, so without it 512 newer statements
+    // in the same session would close a result mid-pagination
+    retain(op, add = false)
+    page
   }
 
   /** Pages kept for idempotent re-fetch before being dropped; older tokens
@@ -1865,18 +1808,21 @@ class Gateway(root: SparkSession) {
     }
 
   def closeOperation(opHandle: String): Unit =
-    operations.remove(opHandle).foreach {
-      _.result match {
-        case StreamingOp(job, _, _) =>
-          // a CURRENT_WATERMARK op owns a shadow temp view: stop the query
-          // first, then drop the view (dropping it under a live query would
-          // fail its next batch); other streaming ops keep running, as
-          // before — cancelOperation is the explicit stop
-          wmShadows.remove(job).foreach { case (sp, shadow) =>
-            Jobs.stop(job)
-            try sp.catalog.dropTempView(shadow) catch { case _: Exception => () }
-          }
-        case _ => ()
-      }
+    operations.get(opHandle).foreach { op =>
+      if (op.session.synchronized(unlink(op))) release(op)
     }
+
+  /** Frees what a closed handle holds outside the registry. */
+  private def release(op: Operation): Unit = op.result match {
+    case StreamingOp(job, _, _) =>
+      // a CURRENT_WATERMARK op owns a shadow temp view: stop the query
+      // first, then drop the view (dropping it under a live query would
+      // fail its next batch); other streaming ops keep running, as
+      // before — cancelOperation is the explicit stop
+      wmShadows.remove(job).foreach { case (sp, shadow) =>
+        Jobs.stop(job)
+        try sp.catalog.dropTempView(shadow) catch { case _: Exception => () }
+      }
+    case _ => ()
+  }
 }

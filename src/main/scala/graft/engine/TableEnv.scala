@@ -51,8 +51,8 @@ object TableEnv {
         .map(c => s"`${c.name}` ${c.sparkType}").mkString(", ")
   }
 
-  /** binding registry, keyed per root SparkSession (sessions share it the way
-    * Flink catalogs are shared across gateway sessions). */
+  /** binding registry by lowercase name, shared by every session the way
+    * Flink catalogs are shared across gateway sessions. */
   private val registry = TrieMap.empty[String, Binding]
 
   /** Serializes namespace-claiming DDL across gateway sessions (see
@@ -64,83 +64,39 @@ object TableEnv {
   def bindings: Map[String, Binding] = registry.toMap
   def lookup(name: String): Option[Binding] = registry.get(name.toLowerCase)
   def drop(name: String): Boolean = registry.remove(name.toLowerCase).isDefined
-  /** Full reset, including the per-session maps (sessionScopes,
-    * plainRelations): a gateway discarded without closeSession would
-    * otherwise pin its SparkSessions here forever. */
-  def clear(): Unit = {
-    registry.clear(); viewDefs.clear(); viewMatTexts.clear()
-    sessionScopes.clear(); plainRelations.clear()
-  }
+  def clear(): Unit = { registry.clear(); views.clear() }
 
   // ------------------------------------------------- views + ALTER TABLE --
 
-  /** view definitions (original Flink SQL text) for SHOW CREATE VIEW
-    * (reference F:77-90; the reference's tree UI lists views per database).
-    *
-    * Non-TEMPORARY views are catalog objects shared by every session
-    * (Flink semantics) and key on scope "". TEMPORARY views are
-    * SESSION-scoped in Flink, so their definitions key on the caller's
-    * scope (the gateway passes its session identity): two sessions may
-    * hold same-named temporary views without conflicting, and one
-    * session's DROP cannot erase another's definition (r11,
-    * ConcurrencySpec caught the shared-registry interference). */
-  private val viewDefs = TrieMap.empty[(String, String), (String, Boolean)]
-  /** (scope, name) → schema-captured materialization text: the original
-    * body wrapped in a projection of the columns resolved at CREATE VIEW
-    * time. Flink stores the EXPANDED query (CatalogView.expandedQuery), so
-    * a `SELECT *` view must NOT grow columns when the underlying table
-    * later evolves (r14 probe find — ALTER ADD used to appear in the view).
-    * SHOW CREATE VIEW keeps showing the original text in viewDefs. */
-  private val viewMatTexts = TrieMap.empty[(String, String), String]
-  def registerView(name: String, sql: String, temporary: Boolean,
-      scope: String = "", materializeSql: Option[String] = None): Unit = {
-    val key = ((if (temporary) scope else ""), name.toLowerCase)
-    viewDefs.put(key, (sql, temporary))
-    materializeSql match {
-      case Some(m) => viewMatTexts.put(key, m)
-      case None => viewMatTexts.remove(key)
-    }
+  /** A catalog view: the original Flink text for SHOW CREATE VIEW
+    * (reference F:77-90) and the text it materializes from. The latter is
+    * the body wrapped in a projection of the columns resolved at CREATE
+    * VIEW time when they are unambiguous — Flink stores the EXPANDED query
+    * (CatalogView.expandedQuery), so a `SELECT *` view must not grow
+    * columns when the underlying table later evolves — else the body. */
+  final case class CatalogView(sql: String, matSql: String)
+
+  /** Catalog views by lowercase name, shared by every session (Flink
+    * semantics). TEMPORARY views are not here: they belong to the gateway
+    * session that created them. */
+  private val views = TrieMap.empty[String, CatalogView]
+  /** Registers a catalog view. The registry holds no TEMPORARY view — those
+    * belong to their gateway session, so `temporary` must be false. */
+  def registerView(name: String, sql: String, temporary: Boolean = false,
+      materializeSql: Option[String] = None): Unit = {
+    require(!temporary, s"TEMPORARY view '$name' belongs to its session, not the catalog")
+    views.put(name.toLowerCase, CatalogView(sql, materializeSql.getOrElse(sql)))
   }
-  /** The text to MATERIALIZE a view from: the schema-captured wrap when one
-    * was resolved at creation, else the original body. Exact-key. */
-  def viewMatSql(name: String, scope: String): Option[String] = {
-    val key = (scope, name.toLowerCase)
-    viewMatTexts.get(key).orElse(viewDefs.get(key).map(_._1))
-  }
-  def viewDef(name: String, scope: String = ""): Option[(String, Boolean)] =
-    viewDefs.get((scope, name.toLowerCase))
-      .orElse(viewDefs.get(("", name.toLowerCase)))
-  /** Exact-key lookup — no catalog fallback. The CREATE TEMPORARY VIEW
-    * exists-check uses this: a temporary view may SHADOW a same-named
-    * catalog view (Flink semantics), so only a conflict in the caller's
-    * own scope blocks creation. */
-  def viewDefExact(name: String, scope: String): Option[(String, Boolean)] =
-    viewDefs.get((scope, name.toLowerCase))
-  /** Removes EXACTLY (scope, name) — no fallback. DROP TEMPORARY VIEW
-    * passes the session scope and can only erase that session's
-    * definition; plain DROP VIEW passes "" and can only erase the shared
-    * catalog definition. (The r11 fallback let one session's DROP
-    * TEMPORARY VIEW delete a shared catalog view — the cross-session
-    * interference the scoping exists to prevent.) */
-  def dropView(name: String, scope: String = ""): Boolean = {
-    viewMatTexts.remove((scope, name.toLowerCase))
-    viewDefs.remove((scope, name.toLowerCase)).isDefined
-  }
-  /** Purge every view definition registered under `scope` — called when a
-    * gateway session closes, else a long-lived gateway accumulates dead
-    * sessions' (uuid, name) keys forever. */
-  def dropScope(scope: String): Unit =
-    if (scope.nonEmpty) {
-      viewDefs.keys.filter(_._1 == scope).foreach(viewDefs.remove)
-      viewMatTexts.keys.filter(_._1 == scope).foreach(viewMatTexts.remove)
-      plainRelations.keys.filter(_._1 == scope).foreach(plainRelations.remove)
-    }
-  /** Shared (catalog) view definitions: name → materialization text.
-    * Every session resolves these at analysis ([[CatalogRelations]]); SHOW
-    * TABLES and SHOW VIEWS list them. */
+  /** The text to materialize a catalog view from. */
+  def viewMatSql(name: String): Option[String] = views.get(name.toLowerCase).map(_.matSql)
+  /** The original Flink text of a catalog view. */
+  def viewDef(name: String): Option[String] = views.get(name.toLowerCase).map(_.sql)
+  def dropView(name: String): Boolean = views.remove(name.toLowerCase).isDefined
+  /** Catalog views: name → materialization text. Every session resolves
+    * these at analysis ([[CatalogRelations]]); SHOW TABLES and SHOW VIEWS
+    * list them. */
   def catalogViews: Map[String, String] =
-    viewDefs.iterator.collect { case (("", n), (sql, _)) =>
-      n -> viewMatTexts.getOrElse(("", n), sql) }.toMap
+    views.iterator.map { case (n, v) => n -> v.matSql }.toMap
 
   // The ALTER verbs below are read-modify-write on the shared registry:
   // two concurrent alters of one table would otherwise both read the same
@@ -421,37 +377,6 @@ object TableEnv {
       case _ => None
     }
   }
-
-  /** Session SparkSession → temp-view scope id, shared across gateway
-    * instances so any gateway (and any direct TableEnv caller) answers the
-    * same DDL conflicts for a session. Keyed by SparkSession OBJECT
-    * identity (the sessionModules precedent — identityHashCode alone can
-    * collide). */
-  private val sessionScopes = TrieMap.empty[SparkSession, String]
-  def sessionScope(spark: SparkSession): String =
-    sessionScopes.getOrElseUpdate(spark, java.util.UUID.randomUUID().toString)
-  /** Drop a closing session's scope mapping; returns the scope it had. */
-  def releaseScope(spark: SparkSession): Option[String] = sessionScopes.remove(spark)
-  /** Test hook: sessions holding a scope — empty once every session that
-    * ran scoped DDL has closed. */
-  private[graft] def scopedSessions: Iterable[SparkSession] = sessionScopes.keys
-
-  /** (scope, lowercase name) of connector-less CREATE TEMPORARY TABLE
-    * relations — session objects with no SQL definition, so viewDefs can't
-    * carry them. Like a temporary view, a temporary table SHADOWS the
-    * shared object of its name, and Flink's DDL conflict answers depend on
-    * it. Purged with the scope in [[dropScope]] and by DROP TEMPORARY TABLE. */
-  private[engine] val plainRelations = TrieMap.empty[(String, String), Unit]
-
-  /** Does `spark`'s session hold a local object (temporary view or plain
-    * temporary table) SHADOWING `name`? Decides the conflict answers of
-    * DDL that addresses a shadowed name. Read-only scope lookup: a session
-    * that never ran scoped DDL has no scope and therefore no shadows. */
-  def locallyShadowed(spark: SparkSession, name: String): Boolean =
-    sessionScopes.get(spark).exists { scope =>
-      viewDefExact(name, scope).isDefined ||
-        plainRelations.contains((scope, name.toLowerCase))
-    }
 
   // ------------------------------------------------------------- parsing --
 
@@ -848,7 +773,7 @@ object TableEnv {
     }
     // tables and views share the catalog namespace (Flink refuses the
     // cross-kind CREATE); IF NOT EXISTS no-ops on the existing object
-    if (viewDefExact(b.name, "").isDefined) {
+    if (viewDef(b.name).isDefined) {
       if (ifNotExists) return b
       throw new IllegalArgumentException(
         s"A view named '${b.name}' already exists — tables and views " +

@@ -14,14 +14,8 @@ package graft.functions
   * near-duplicates the operator finds.
   */
 object MinHash {
-  /** A/B escape hatch for measurement only (GRAFT_MINHASH_SCALAR=1 forces
-    * the scalar twin in this JVM) — kernels are value-identical, so this
-    * can never change results, only speed. */
-  private val forceScalar = sys.env.get("GRAFT_MINHASH_SCALAR").contains("1")
-
   private val vectorKernel: MinHashKernel =
-    if (forceScalar) null
-    else try {
+    try {
       val kern = Class.forName("graft.functions.MinHashVector")
         .getDeclaredConstructor().newInstance().asInstanceOf[MinHashKernel]
       // Load-time value-parity probe: deterministic pseudo-random inputs

@@ -250,9 +250,7 @@ object CorpusFilters {
       .localCheckpoint()
     var converged = false
     var iter = 0
-    val trace = sys.env.contains("GRAFT_CLUSTER_TRACE")
     while (!converged && iter < maxIters) {
-      val t0 = if (trace) System.nanoTime() else 0L
       val viaNeighbor = edges.join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id")).agg(min(col("label")).as("nlabel"))
       // eager localCheckpoint each round: cache() alone leaves the LOGICAL
@@ -272,8 +270,6 @@ object CorpusFilters {
       labels = next
       converged = changed == 0
       iter += 1
-      if (trace) println(f"[cluster-trace] round $iter: " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s, changed=${changed != 0}")
     }
     // a silent exit at maxIters returns WRONG labels (one real cluster
     // split into several ids) — min labels move one hop per round, so a

@@ -199,15 +199,18 @@ class ConcurrencySpec extends SparkTestBase {
     assert(run(b, "SELECT x FROM scoped_v").columns == Seq("error"),
       "dropped catalog view still readable in another session")
     gw.closeSession(c)
-    // closeSession purges the session's scoped definitions — without the
-    // purge a long-lived gateway leaks one entry per dead temp view
+    // closeSession takes the session's temporary objects with it — without
+    // that a long-lived gateway leaks one entry per dead temp view
     assert(run(b, "CREATE TEMPORARY VIEW purge_me AS SELECT 3 AS x").columns != Seq("error"))
-    val scopeB = gw.viewScopeOf(b)
-    assert(graft.engine.TableEnv.viewDefExact("purge_me", scopeB).isDefined)
+    assert(run(b, "SELECT x FROM purge_me").rows == Seq(Seq(3)))
     gw.closeSession(b)
-    assert(graft.engine.TableEnv.viewDefExact("purge_me", scopeB).isEmpty,
-      "closed session's temp-view definitions must be purged")
+    val d = gw.openSession("scope_d")
+    assert(run(d, "SELECT x FROM purge_me").columns == Seq("error"),
+      "closed session's temp view must not resolve from a new session")
+    gw.closeSession(d)
     gw.closeSession(a)
+    assert(gw.liveSessionCount == 0 && gw.liveOperationCount == 0,
+      "closed sessions must leave nothing in the gateway's registries")
   }
 
   test("8 sessions soak the streaming lifecycle: INSERT jobs, STOP JOB, close with live jobs") {
@@ -842,20 +845,5 @@ class ConcurrencySpec extends SparkTestBase {
     assert(p.rows.size == gw.pageSize, s"big result evicted mid-pagination")
     gw.closeSession(h)
     assert(gw.liveOperationCount == 0)
-  }
-
-  test("TableEnv.clear resets the shared session registries (r16 ADVICE)") {
-    // clear() pre-r17 reset only the binding/view maps: a gateway discarded
-    // WITHOUT closeSession pinned its SparkSessions in the shared
-    // per-session state forever, and a long-lived process leaked them.
-    import graft.engine.TableEnv
-    val s2 = spark.newSession()
-    val scope = TableEnv.sessionScope(s2)
-    assert(TableEnv.scopedSessions.exists(_ eq s2))
-    TableEnv.clear()
-    assert(!TableEnv.scopedSessions.exists(_ eq s2),
-      "clear() must evict registered sessions")
-    assert(TableEnv.sessionScope(s2) != scope,
-      "clear() must reset session scopes (a retained scope would leak its keys)")
   }
 }

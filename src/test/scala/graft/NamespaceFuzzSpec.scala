@@ -366,8 +366,8 @@ class NamespaceFuzzSpec extends SparkTestBase {
     }
     assert(names.forall(n => TableEnv.lookup(n).isEmpty),
       s"binding leak: ${names.filter(n => TableEnv.lookup(n).isDefined)}")
-    assert(names.forall(n => TableEnv.viewDefExact(n, "").isEmpty),
-      s"catalog-view leak: ${names.filter(n => TableEnv.viewDefExact(n, "").isDefined)}")
+    assert(names.forall(n => TableEnv.viewDef(n).isEmpty),
+      s"catalog-view leak: ${names.filter(n => TableEnv.viewDef(n).isDefined)}")
     gw.closeSession(h)
   }
 
@@ -375,15 +375,16 @@ class NamespaceFuzzSpec extends SparkTestBase {
     // The r16 split-topology fuzz holds its sessions STATIC. This variant
     // CLOSES one gateway's sessions mid-run while the OTHER gateway storms
     // namespace DDL on the shared registry, racing the closing sessions'
-    // releaseScope/dropScope. Invariants under ANY interleaving:
+    // release of their temporary objects. Invariants under ANY interleaving:
     //   (1) no internal error, no worker crash;
     //   (2) a LIVE churned-in session always reads its OWN temp-view shadow
     //       (count 1, its VALUES body) whatever the storm does to the
     //       shared name — a sweep must never clobber a shadow, and a scope
     //       release must never take another session's shadow with it;
-    //   (3) closed sessions leave nothing behind: after the storm no
-    //       session holds a scope in the shared per-session state (the
-    //       r16 ADVICE leak class).
+    //   (3) closed sessions leave nothing behind: after the storm neither
+    //       gateway holds a session or a result handle, and no closed
+    //       session's temp view resolves from a new one (the r16 ADVICE
+    //       leak class).
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
     for (seed <- Seq(9101L, 9102L, 9103L)) {
       TableEnv.clear()
@@ -461,8 +462,8 @@ class NamespaceFuzzSpec extends SparkTestBase {
         s"seed $seed: ${failures.toArray.mkString("; ")}")
       assert(internal.isEmpty,
         s"seed $seed: internal errors:\n${internal.toArray.mkString("\n")}")
-      // (3) every session closed -> the shared per-session state is empty
-      assert(TableEnv.scopedSessions.isEmpty,
+      // (3) every session closed -> the gateways' registries are empty
+      assert(Seq(gwA, gwB).forall(g => g.liveSessionCount == 0 && g.liveOperationCount == 0),
         s"seed $seed: closed sessions leaked in the live-session registry")
       // cleanup for the next seed
       val h = gwA.openSession("churn_cleanup")
@@ -470,15 +471,20 @@ class NamespaceFuzzSpec extends SparkTestBase {
         "DROP TABLE IF EXISTS churn_u").foreach(s =>
         gwA.fetchResults(gwA.executeStatement(h, s), 0))
       gwA.closeSession(h)
+      // no closed session's temp view resolves from a new session
+      val probe = gwB.openSession("churn_probe")
+      assert(gwB.fetchResults(gwB.executeStatement(probe,
+        "SELECT count(*) AS c FROM churn_x"), 0).columns == Seq("error"),
+        s"seed $seed: a closed session's temp view resolves from a new session")
+      gwB.closeSession(probe)
     }
   }
 
   test("session churn x TableEnv.clear(): full reset races eviction sweeps and scope release (r18)") {
-    // r17 made clear() reset the SHARED per-session registries; the r17
-    // churn fuzz never crossed that path. This variant adds a RESET thread
-    // that, mid-storm, walks the per-session scope map and fires
-    // TableEnv.clear() — racing the storm's DDL and the churn sessions'
-    // scope releases. Invariants under ANY interleaving:
+    // The r17 churn fuzz never crossed TableEnv.clear(). This variant adds
+    // a RESET thread that, mid-storm, walks a gateway's live sessions and
+    // fires TableEnv.clear() — racing the storm's DDL and the churn
+    // sessions' closes. Invariants under ANY interleaving:
     //   (1) no internal error, no worker crash — a statement reading maps
     //       that clear() is wiping must degrade to a named error, never
     //       throw through;
@@ -486,7 +492,8 @@ class NamespaceFuzzSpec extends SparkTestBase {
     //       fired after the shadow was created (clear wipes scopes BY
     //       CONTRACT; a wrong read with no intervening clear is a bug);
     //   (3) after the storm, with every session closed and a final clear,
-    //       no session holds a scope.
+    //       neither gateway holds a session or a result handle, and no
+    //       closed session's temp view resolves from a new one.
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
     for (seed <- Seq(8201L, 8202L, 8203L)) {
       TableEnv.clear()
@@ -548,7 +555,7 @@ class NamespaceFuzzSpec extends SparkTestBase {
           val rnd = new Random(seed * 17)
           while (!stormDone.get()) {
             Thread.sleep((2 + rnd.nextInt(10)).toLong)
-            TableEnv.scopedSessions.size: Unit // scope-map walk
+            gwB.liveSessionCount: Unit // live-session walk
             if (rnd.nextInt(3) == 0) {
               val t0 = System.nanoTime()
               TableEnv.clear()
@@ -600,15 +607,21 @@ class NamespaceFuzzSpec extends SparkTestBase {
         s"seed $seed: ${failures.toArray.mkString("; ")}")
       assert(internal.isEmpty,
         s"seed $seed: internal errors:\n${internal.toArray.mkString("\n")}")
-      // (3) everything closed + a final reset -> registry empty
+      // (3) everything closed + a final reset -> registries empty
       TableEnv.clear()
-      assert(TableEnv.scopedSessions.isEmpty,
+      assert(Seq(gwA, gwB).forall(g => g.liveSessionCount == 0 && g.liveOperationCount == 0),
         s"seed $seed: sessions survived close + clear")
       val h = gwA.openSession("clr_cleanup")
       Seq("DROP VIEW IF EXISTS clr_x", "DROP TABLE IF EXISTS clr_t",
         "DROP TABLE IF EXISTS clr_u").foreach(s =>
         gwA.fetchResults(gwA.executeStatement(h, s), 0))
       gwA.closeSession(h)
+      // no closed session's temp view resolves from a new session
+      val probe = gwB.openSession("clr_probe")
+      assert(gwB.fetchResults(gwB.executeStatement(probe,
+        "SELECT count(*) AS c FROM clr_x"), 0).columns == Seq("error"),
+        s"seed $seed: a closed session's temp view resolves from a new session")
+      gwB.closeSession(probe)
       TableEnv.clear()
     }
   }

@@ -162,6 +162,18 @@ class ResultsSpec extends SparkTestBase {
     assert(run("LOAD MODULE fancy").rows.head.head.toString.contains("module factory"))
     assert(run("UNLOAD MODULE nope").rows.head.head.toString.contains("No module"))
     assert(run("USE MODULES core, nope").rows.head.head.toString.contains("No module"))
+    // the module list is per session: UNLOAD in this session leaves the
+    // other session's list and its core functions alone
+    def runIn(s: String, stmt: String) = gw.fetchResults(gw.executeStatement(s, stmt), 0)
+    run("UNLOAD MODULE core")
+    assert(runIn(h2, "SHOW MODULES").rows == Seq(Seq("core")))
+    assert(runIn(h2, "SELECT SPLIT_INDEX('a,b,c', ',', 1) AS s").rows == Seq(Seq("b")))
+    // a session opened after this one closes starts with core loaded
+    gw.closeSession(h)
+    val h3 = gw.openSession()
+    assert(runIn(h3, "SHOW FULL MODULES").rows == Seq(Seq("core", true)))
+    assert(runIn(h3, "SELECT SPLIT_INDEX('a,b,c', ',', 2) AS s").rows == Seq(Seq("c")))
+    gw.closeSession(h2); gw.closeSession(h3)
   }
 
   test("metadata TTL cache: dedup, TTL expiry, DDL invalidation") {

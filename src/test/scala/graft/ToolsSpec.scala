@@ -71,4 +71,21 @@ class ToolsSpec extends AnyFunSuite {
     assert(hits.map(_.getFileName.toString) == Seq("GraftSession.scala"),
       s"builder call sites outside GraftSession: ${hits.mkString(", ")}")
   }
+
+  test("the engine keys no map or set by SparkSession: per-session state lives in Gateway.Session") {
+    // a Map/Set type (TrieMap, LinkedHashMap, java.util.Set, ...) whose key
+    // type is SparkSession, across a line break before `.empty` too
+    val keyed = """\b\w*(?:Map|Set)\b[\s.]*(?:empty\s*)?\[\s*(?:[\w.]+\.)?SparkSession\b""".r
+    val root = java.nio.file.Paths.get("src/main/scala/graft/engine")
+    assert(java.nio.file.Files.isDirectory(root), s"missing $root")
+    val walk = java.nio.file.Files.walk(root)
+    val hits =
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "ISO-8859-1")
+        keyed.findAllMatchIn(text).map(m =>
+          s"${p.getFileName}:${text.substring(0, m.start).count(_ == '\n') + 1}")
+      }.toList
+      finally walk.close()
+    assert(hits.isEmpty, s"SparkSession-keyed maps or sets: ${hits.mkString(", ")}")
+  }
 }
