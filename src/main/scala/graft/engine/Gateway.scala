@@ -12,7 +12,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * src/sessionManager.ts:257-288).
   *
   * Semantics reproduced:
-  *  - named sessions with isolated conf/temp views (`SparkSession.newSession`),
+  *  - named sessions with isolated conf/temp views (clones of one prepared
+  *    template session),
   *    current-database state, and auto-recovery (`getOrRecreate`);
   *  - statement execution returns an operation handle; results are fetched
   *    page-by-token ({rows, nextToken, eos} — flinkClient.ts:154-172);
@@ -25,6 +26,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *    + Catalyst.
   */
 class Gateway(root: SparkSession) {
+  import Gateway._
 
   // Bindings and catalog views live only in the shared TableEnv registry;
   // every session resolves them at analysis time (CatalogRelations), so no
@@ -59,27 +61,6 @@ class Gateway(root: SparkSession) {
     }
     /** estimated result bytes its live handles retain */
     private[Gateway] def retainedBytes: Long = synchronized(ops.valuesIterator.map(_.retainedBytes).sum)
-  }
-
-  sealed trait OpResult
-  final case class Finished(df: DataFrame) extends OpResult
-  /** small, already-materialized result (cached metadata) */
-  final case class Rows(columns: Seq[String], rows: Seq[Seq[Any]]) extends OpResult
-  final case class StreamingOp(jobName: String, buffer: RingBuffer, cols: Seq[String]) extends OpResult
-  final case class Statement(message: String) extends OpResult
-  /** failed statement with the extracted root cause (flinkClient.ts:78-125) */
-  final case class Failed(error: String) extends OpResult
-
-  /** Drop-oldest bounded buffer with running offset (ref buffer semantics). */
-  final class RingBuffer(val capacity: Int = 1000) {
-    private val buf = ArrayBuffer.empty[Row]
-    private var offset0 = 0L
-    def append(rows: Seq[Row]): Unit = synchronized {
-      buf ++= rows
-      val over = buf.length - capacity
-      if (over > 0) { buf.remove(0, over); offset0 += over }
-    }
-    def snapshot: (Long, Seq[Row]) = synchronized { (offset0, buf.toSeq) }
   }
 
   final class Operation(val handle: String, val result: OpResult, val session: Session) {
@@ -203,15 +184,24 @@ class Gateway(root: SparkSession) {
 
   // ------------------------------------------------------------- sessions --
 
+  /** What every session starts from, prepared once per gateway: newSession()
+    * isolates the function registry along with conf/temp views and starts
+    * with no extra optimizer rules, so it gets the root's `prepare`, plus
+    * `dual`, the 1-row scratch relation (the corpus SELECTs FROM dual,
+    * Oracle-style). No statement ever runs in it. */
+  private lazy val template = {
+    val t = GraftSession.prepare(root.newSession())
+    t.sql("CREATE OR REPLACE TEMPORARY VIEW dual AS SELECT 1 AS dummy")
+    t
+  }
+
+  /** A new session is a clone of the template: it speaks the full surface
+    * and plans the same way as a prepared session, in milliseconds, and its
+    * conf, temp views and functions stay its own. */
   def openSession(name: String = "default"): String = {
     val handle = s"$name-${UUID.randomUUID()}"
-    // newSession() isolates the function registry along with conf/temp views
-    // and starts with no extra optimizer rules — prepare it like the root so
-    // every gateway session speaks the full surface and plans the same way
-    val s = GraftSession.prepare(root.newSession())
-    // 1-row scratch relation (the corpus SELECTs FROM dual, Oracle-style)
-    s.sql("CREATE OR REPLACE TEMPORARY VIEW dual AS SELECT 1 AS dummy")
-    sessions.put(handle, new Session(handle, s))
+    sessions.put(handle, new Session(handle,
+      org.apache.spark.sql.graft.Shims.cloneSession(template)))
     handle
   }
 
@@ -1292,6 +1282,8 @@ class Gateway(root: SparkSession) {
           case Some(b) if overrides.nonEmpty =>
             val nb = b.copy(options = b.options ++ overrides)
             val shadow = s"${b.name}__opts_${math.abs(overrides.hashCode)}"
+            // a failed read raises the binding's ReadError; only a
+            // sink-only connector has no relation for the hint to modify
             TableEnv.materializeDF(spark, nb) match {
               case Some(df) =>
                 df.createOrReplaceTempView(shadow)
@@ -1648,7 +1640,8 @@ class Gateway(root: SparkSession) {
 
   // -------------------------------------------------------------- results --
 
-  final case class Page(columns: Seq[String], rows: Seq[Seq[Any]], nextToken: Option[Int], eos: Boolean)
+  /** One page of a result; `gw.Page` and `Gateway#Page` name it too. */
+  type Page = Gateway.Page
 
   /** Token-paged fetch (flinkClient.ts:154-172). Batch results are collected
     * once into pageSize chunks; streaming ops snapshot the ring buffer. */
@@ -1824,5 +1817,31 @@ class Gateway(root: SparkSession) {
         try sp.catalog.dropTempView(shadow) catch { case _: Exception => () }
       }
     case _ => ()
+  }
+}
+
+object Gateway {
+  final case class Page(columns: Seq[String], rows: Seq[Seq[Any]], nextToken: Option[Int], eos: Boolean)
+
+  /** What a statement produced, before paging. */
+  sealed trait OpResult
+  final case class Finished(df: DataFrame) extends OpResult
+  /** small, already-materialized result (cached metadata) */
+  final case class Rows(columns: Seq[String], rows: Seq[Seq[Any]]) extends OpResult
+  final case class StreamingOp(jobName: String, buffer: RingBuffer, cols: Seq[String]) extends OpResult
+  final case class Statement(message: String) extends OpResult
+  /** failed statement with the extracted root cause (flinkClient.ts:78-125) */
+  final case class Failed(error: String) extends OpResult
+
+  /** Drop-oldest bounded buffer with running offset (ref buffer semantics). */
+  final class RingBuffer(val capacity: Int = 1000) {
+    private val buf = ArrayBuffer.empty[Row]
+    private var offset0 = 0L
+    def append(rows: Seq[Row]): Unit = synchronized {
+      buf ++= rows
+      val over = buf.length - capacity
+      if (over > 0) { buf.remove(0, over); offset0 += over }
+    }
+    def snapshot: (Long, Seq[Row]) = synchronized { (offset0, buf.toSeq) }
   }
 }

@@ -5,9 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Library entry point and the engine's one session factory: a SparkSession
   * configured the way the engine expects (UTC wall-clock semantics, AQE with
   * skew handling, sane local shuffle width, `file:` paths on the fork-free
-  * local filesystem) and prepared by [[prepare]]. Every session the engine
-  * hands out gets the same `prepare`: `create` runs it on the root session
-  * and `Gateway.openSession` on each gateway session, because
+  * local filesystem, one artifact state for every session) and prepared by
+  * [[prepare]]. Every session the engine hands out is prepared: `create`
+  * runs `prepare` on the root session and each `Gateway` on one template
+  * session that `Gateway.openSession` clones, because
   * `SparkSession.newSession()` starts with an empty function registry and
   * no extra optimizer rules. A user of the reference toolkit starts here:
   *
@@ -33,12 +34,26 @@ import org.apache.spark.sql.SparkSession
   * which give the same results in-process. A streaming SELECT drains each
   * micro-batch in one job and keeps the first ring-buffer `capacity` rows of
   * an oversized batch (see `Gateway`).
+  *
+  * Spark's per-session artifact isolation is off. With it on, every session
+  * (each gateway session, and the clone Structured Streaming makes for each
+  * query) gets its own artifact state, so executors load its classes
+  * through a class loader of its own, and the generated-code cache, keyed by
+  * class loader, starts empty: every new session recompiled every
+  * whole-stage class it ran. Off, all sessions share one artifact state, one
+  * executor class loader and one compiled-code cache. Nothing in the engine
+  * needs a class loader per session. The one difference a user can see: a
+  * jar `ADD JAR` adds in one gateway session becomes loadable in all of
+  * them (it always landed in the shared SparkContext, and `SHOW JARS`
+  * already listed every session's jars), where Flink scopes `ADD JAR` to
+  * its session.
   */
 object GraftSession {
 
   def configure(b: SparkSession.Builder): SparkSession.Builder = ForkFreeLocalFs.hadoopConf
     .foldLeft(b) { case (b0, (k, v)) => b0.config(s"spark.hadoop.$k", v) }
     .withExtensions(_.injectResolutionRule(new CatalogRelations(_)))
+    .config("spark.sql.artifact.isolation.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -58,7 +73,7 @@ object GraftSession {
 
   /** Per-session setup, the one place it runs: the Flink-dialect functions,
     * the `dsum4` aggregate and the two-phase CUMULATE optimizer rule.
-    * Idempotent per session. */
+    * Idempotent per session; a clone of a prepared session is prepared. */
   def prepare(spark: SparkSession): SparkSession = {
     graft.functions.FlinkFunctions.registerAll(spark)
     graft.functions.Aggregators.registerAll(spark)

@@ -122,7 +122,9 @@ object Results {
     * server stack traces). */
   def rootCauseMessage(e: Throwable): String = {
     var cur = e
-    while (cur.getCause != null && cur.getCause != cur) cur = cur.getCause
+    // a ReadError already names its binding and carries the cause's message
+    while (cur.getCause != null && cur.getCause != cur && !cur.isInstanceOf[TableEnv.ReadError])
+      cur = cur.getCause
     val m = cur.getMessage
     // first NON-EMPTY line: Spark's ParseException message begins with a
     // newline, so taking the literal first line surfaced every parse error

@@ -81,12 +81,9 @@ object TableEnv {
     * session that created them. */
   private val views = TrieMap.empty[String, CatalogView]
   /** Registers a catalog view. The registry holds no TEMPORARY view — those
-    * belong to their gateway session, so `temporary` must be false. */
-  def registerView(name: String, sql: String, temporary: Boolean = false,
-      materializeSql: Option[String] = None): Unit = {
-    require(!temporary, s"TEMPORARY view '$name' belongs to its session, not the catalog")
+    * belong to their gateway session. */
+  def registerView(name: String, sql: String, materializeSql: Option[String] = None): Unit =
     views.put(name.toLowerCase, CatalogView(sql, materializeSql.getOrElse(sql)))
-  }
   /** The text to materialize a catalog view from. */
   def viewMatSql(name: String): Option[String] = views.get(name.toLowerCase).map(_.matSql)
   /** The original Flink text of a catalog view. */
@@ -362,18 +359,25 @@ object TableEnv {
     nb
   }
 
+  /** A binding's source could not be read: names the binding and its
+    * connector, and carries the cause. */
+  final class ReadError(val binding: String, val connector: String, cause: Throwable)
+    extends RuntimeException(s"cannot read table '$binding' (connector '$connector'): " +
+      Results.rootCauseMessage(cause), cause)
+
   /** The DataFrame a binding resolves to (batch or streaming per its
     * connector nature), built fresh for each analysis; None for sink-only
-    * connectors or failed reads. */
+    * connectors. A failed read raises [[ReadError]]. */
   def materializeDF(spark: SparkSession, b: Binding): Option[DataFrame] = {
-    def tryOpt(f: => DataFrame) = try Some(f) catch { case _: Exception => None }
+    def read(f: => DataFrame) =
+      try Some(f) catch { case e: Exception => throw new ReadError(b.name, b.connector, e) }
     b.connector match {
-      case "datagen" if !b.options.contains("number-of-rows") => tryOpt(streamDF(spark, b))
-      case "filesystem" | "datagen" | "values" | "jdbc" => tryOpt(batchDF(spark, b))
-      case "kafka" | "upsert-kafka" => tryOpt(streamDF(spark, b))
+      case "datagen" if !b.options.contains("number-of-rows") => read(streamDF(spark, b))
+      case "filesystem" | "datagen" | "values" | "jdbc" => read(batchDF(spark, b))
+      case "kafka" | "upsert-kafka" => read(streamDF(spark, b))
       // CDC sources are changelog streams first (Flink's CLI view of them);
       // batchDF gives the snapshot when a bounded read is wanted
-      case c if c.endsWith("-cdc") => tryOpt(streamDF(spark, b))
+      case c if c.endsWith("-cdc") => read(streamDF(spark, b))
       case _ => None
     }
   }

@@ -138,30 +138,26 @@ object FlinkFunctions {
   def functionNames: Seq[String] =
     sqlUdfNames ++ shimNamesSeen.toSeq ++ Seq("GCD", "LCM")
 
-  // memo keyed by the session OBJECT (identity equals), weakly — an
-  // identityHashCode key can collide across sessions (silently skipping
-  // registration), and a strong key would pin closed sessions forever
-  private val registered: java.util.Set[SparkSession] =
-    java.util.Collections.synchronizedSet(java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+  /** The last shim registered: its presence marks a session that holds the
+    * catalog — a clone of a prepared session included. */
+  private val Sentinel = "quality_stats"
 
   /** Drop every `core`-module function from the session (UNLOAD MODULE core
-    * / USE MODULES without core) and clear the memo so a later re-load
-    * re-registers. Session-scoped: temp functions never leak across
-    * `newSession()` boundaries, so other gateway sessions keep theirs. */
-  def unregisterAll(spark: SparkSession): Unit = {
+    * / USE MODULES without core), so a later re-load re-registers.
+    * Session-scoped: temp functions never leak across sessions, so other
+    * gateway sessions keep theirs. */
+  def unregisterAll(spark: SparkSession): Unit =
     functionNames.foreach { n =>
       try spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS `$n`")
       catch { case _: Exception => () }
     }
-    registered.remove(spark)
-  }
 
-  /** Register everything into the session (memoized per session). Names that
-    * Spark already ships as builtins (e.g. dayname/monthname/to_timestamp_ltz
-    * in 4.1) are left alone — the builtin wins. */
+  /** Register everything into the session, unless it already holds the
+    * catalog. Names that Spark already ships as builtins (e.g.
+    * dayname/monthname/to_timestamp_ltz in 4.1) are left alone — the
+    * builtin wins. */
   def registerAll(spark: SparkSession): Unit = {
-    if (!registered.add(spark)) return
+    if (org.apache.spark.sql.graft.Shims.hasFunction(spark, Sentinel)) return
     // Flink map construction/union is last-key-wins; Spark's default policy
     // throws on duplicate keys — align the session
     try spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
@@ -218,7 +214,7 @@ object FlinkFunctions {
     shim("word_ngrams")(args => WordNgrams(args(0),
       litInt(args(1), "word_ngrams n"),
       args.lift(2).exists(_.eval() == true)))
-    shim("quality_stats")(args => QualityStats(args(0),
+    shim(Sentinel)(args => QualityStats(args(0),
       graft.pipeline.TextAnalysis.StopWords))
     // GCD/LCM need iteration — Scala UDFs (rarely on a hot path).
     if (!spark.catalog.functionExists("gcd")) {

@@ -126,7 +126,7 @@ class CatalogRelationsSpec extends SparkTestBase {
     assert(run(gw, b, "SELECT x FROM cyc_y").rows == Seq(Seq(1)))
     // a cyclic definition that reached the registry some other way fails
     // by name at reference time, in any session
-    TableEnv.registerView("cyc_x", "SELECT x FROM cyc_y", temporary = false)
+    TableEnv.registerView("cyc_x", "SELECT x FROM cyc_y")
     cycleError(run(gw, b, "SELECT * FROM cyc_x"), "reference to a cyclic view")
     cycleError(run(gw, a, "SELECT count(*) FROM cyc_y"), "reference through a cyclic view")
     gw.closeSession(a); gw.closeSession(b)
