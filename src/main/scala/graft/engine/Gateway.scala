@@ -562,18 +562,20 @@ class Gateway(root: SparkSession) {
     val dup = names.diff(names.distinct)
     if (dup.nonEmpty) throw new IllegalArgumentException(
       s"Module '${dup.head}' appears more than once in USE MODULES")
-    sess.synchronized {
+    val coreWasUsed = sess.synchronized {
       val mods = sess.modules
       names.find(!mods.contains(_)).foreach(m =>
         throw new IllegalArgumentException(s"No module with name '$m' exists"))
+      val was = mods.getOrElse("core", false)
       // USE order becomes resolution (and SHOW MODULES) order; loaded-but-
       // unlisted modules stay loaded with used=false (Flink semantics)
       val unlisted = mods.keys.filterNot(names.contains).toList
       mods.clear()
       names.foreach(mods.put(_, true))
       unlisted.foreach(mods.put(_, false))
+      was
     }
-    syncCoreModule(sess)
+    if (names.contains("core") != coreWasUsed) syncCoreModule(sess)
     Statement(s"Modules in use: ${names.mkString(", ")}")
   }
 

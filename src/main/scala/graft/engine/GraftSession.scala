@@ -42,11 +42,11 @@ import org.apache.spark.sql.SparkSession
   * class loader, starts empty: every new session recompiled every
   * whole-stage class it ran. Off, all sessions share one artifact state, one
   * executor class loader and one compiled-code cache. Nothing in the engine
-  * needs a class loader per session. The one difference a user can see: a
-  * jar `ADD JAR` adds in one gateway session becomes loadable in all of
-  * them (it always landed in the shared SparkContext, and `SHOW JARS`
-  * already listed every session's jars), where Flink scopes `ADD JAR` to
-  * its session.
+  * needs a class loader per session. `ADD JAR` is not session-scoped either
+  * way: the jar joins the class loader all sessions share and the shared
+  * SparkContext, so in local mode it is loadable in every gateway session
+  * with isolation on or off, and `SHOW JARS` lists every session's jars.
+  * Flink scopes `ADD JAR` to its session; this engine does not.
   */
 object GraftSession {
 
@@ -75,7 +75,8 @@ object GraftSession {
     * the `dsum4` aggregate and the two-phase CUMULATE optimizer rule.
     * Idempotent per session; a clone of a prepared session is prepared. */
   def prepare(spark: SparkSession): SparkSession = {
-    graft.functions.FlinkFunctions.registerAll(spark)
+    if (!graft.functions.FlinkFunctions.registeredIn(spark))
+      graft.functions.FlinkFunctions.registerAll(spark)
     graft.functions.Aggregators.registerAll(spark)
     graft.plans.CumulateTwoPhase.install(spark)
     spark

@@ -138,9 +138,15 @@ object FlinkFunctions {
   def functionNames: Seq[String] =
     sqlUdfNames ++ shimNamesSeen.toSeq ++ Seq("GCD", "LCM")
 
-  /** The last shim registered: its presence marks a session that holds the
-    * catalog — a clone of a prepared session included. */
+  /** The last shim registerAll registers (only the GCD/LCM Scala UDFs
+    * follow it). */
   private val Sentinel = "quality_stats"
+
+  /** Does the session already hold the catalog — a clone of a prepared
+    * session included? Lets `GraftSession.prepare` skip a second
+    * registration; the module path registers unconditionally. */
+  def registeredIn(spark: SparkSession): Boolean =
+    org.apache.spark.sql.graft.Shims.hasFunction(spark, Sentinel)
 
   /** Drop every `core`-module function from the session (UNLOAD MODULE core
     * / USE MODULES without core), so a later re-load re-registers.
@@ -152,12 +158,11 @@ object FlinkFunctions {
       catch { case _: Exception => () }
     }
 
-  /** Register everything into the session, unless it already holds the
-    * catalog. Names that Spark already ships as builtins (e.g.
+  /** Register everything into the session, replacing what is there. Names
+    * that Spark already ships as builtins (e.g.
     * dayname/monthname/to_timestamp_ltz in 4.1) are left alone — the
     * builtin wins. */
   def registerAll(spark: SparkSession): Unit = {
-    if (org.apache.spark.sql.graft.Shims.hasFunction(spark, Sentinel)) return
     // Flink map construction/union is last-key-wins; Spark's default policy
     // throws on duplicate keys — align the session
     try spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")

@@ -89,16 +89,48 @@ class WarmSessionSpec extends SparkTestBase {
     Seq(a, b, c).foreach(gw.closeSession)
   }
 
-  test("ADD JAR in one session: every session lists the jar") {
+  test("UNLOAD core, a user function named like a core function, LOAD core: core is back") {
+    TableEnv.clear()
+    val gw = new Gateway(spark)
+    val h = gw.openSession("reload")
+    val split = "SELECT SPLIT_INDEX('a,b,c', ',', 1) AS s"
+    assert(run(gw, h, "UNLOAD MODULE core").columns != Seq("error"))
+    assert(run(gw, h, split).columns == Seq("error"))
+    gw.session(h).spark.sql(
+      "CREATE TEMPORARY FUNCTION quality_stats(s STRING) RETURNS INT RETURN length(s)")
+    assert(run(gw, h, "LOAD MODULE core").columns != Seq("error"))
+    assert(run(gw, h, "SHOW MODULES").rows == Seq(Seq("core")))
+    assert(run(gw, h, split).rows == Seq(Seq("b")), "core listed as loaded, its functions missing")
+    // USE MODULES that keeps core in use leaves the catalog in place
+    assert(run(gw, h, "USE MODULES core").columns != Seq("error"))
+    assert(run(gw, h, split).rows == Seq(Seq("b")))
+    gw.closeSession(h)
+  }
+
+  test("ADD JAR in one session: every session loads the jar's classes") {
+    import java.nio.file.Files
     TableEnv.clear()
     val gw = new Gateway(spark)
     val a = gw.openSession("jar_a")
     val b = gw.openSession("jar_b")
-    val jarPath = java.nio.file.Files.createTempFile("graft-shared", ".jar")
-    val zos = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(jarPath))
-    zos.putNextEntry(new java.util.zip.ZipEntry("dummy.txt")); zos.write(1); zos.close()
+    val cls = s"GraftJarProbe${System.nanoTime()}"
+    val src = Files.createTempDirectory("graft-jar-src")
+    val source = src.resolve(s"$cls.java")
+    Files.writeString(source,
+      s"public class $cls { public static String answer() { return \"from the jar\"; } }")
+    assert(javax.tools.ToolProvider.getSystemJavaCompiler
+      .run(null, null, null, "-d", src.toString, source.toString) == 0)
+    val jarPath = Files.createTempFile("graft-shared", ".jar")
+    val zos = new java.util.zip.ZipOutputStream(Files.newOutputStream(jarPath))
+    zos.putNextEntry(new java.util.zip.ZipEntry(s"$cls.class"))
+    zos.write(Files.readAllBytes(src.resolve(s"$cls.class"))); zos.close()
+    val call = s"SELECT reflect('$cls', 'answer') AS r"
+    assert(run(gw, b, call).columns == Seq("error"), "the class loads without the jar")
     val added = run(gw, a, s"ADD JAR '$jarPath'")
     assert(added.columns != Seq("error"), added.rows)
+    assert(run(gw, a, call).rows == Seq(Seq("from the jar")))
+    assert(run(gw, b, call).rows == Seq(Seq("from the jar")),
+      "session B cannot load a class from the jar session A added")
     val jars = run(gw, b, "SHOW JARS").rows.map(_.head.toString)
     assert(jars.exists(_.contains(jarPath.getFileName.toString)), jars)
     gw.closeSession(a); gw.closeSession(b)
