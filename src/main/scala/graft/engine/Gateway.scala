@@ -243,6 +243,8 @@ class Gateway(root: SparkSession) {
   private val InsertColsRe =
     """(?is)INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?([\w.`]+)\s*(?:\(([^)]+)\)\s*)?((?:SELECT|VALUES).*)""".r
   private val ShowCreateRe = """(?is)SHOW\s+CREATE\s+TABLE\s+([\w.`]+)""".r
+  private val RelationCommandRe =
+    """(?is)(TRUNCATE\s+TABLE|ANALYZE\s+TABLE|SHOW\s+PARTITIONS)\s+([\w.`]+)(?:\s.*)?""".r
   private val DescribeRe = """(?is)(?:DESCRIBE|DESC)\s+(?:TABLE\s+)?([\w.`]+)""".r
   private val ShowColumnsRe = """(?is)SHOW\s+COLUMNS\s+(?:FROM|IN)\s+([\w`]+)""".r
   private val ShowTablesRe =
@@ -1240,6 +1242,20 @@ class Gateway(root: SparkSession) {
         throw new IllegalArgumentException(
           s"'${from.replace("`", "")}' is not an alterable table — " +
             "ALTER TABLE cannot rename a view or a temporary table")
+      // Spark's relation commands cannot see an object that only the
+      // analyzer rule resolves: name it instead of TABLE_OR_VIEW_NOT_FOUND
+      case RelationCommandRe(cmd, target) if registryOnly(spark, target.replace("`", "")) =>
+        val n = target.replace("`", "")
+        val what = TableEnv.lookup(n)
+          .map(b => s"connector binding '$n' (connector '${b.connector}')")
+          .getOrElse(s"catalog view '$n'")
+        throw new UnsupportedOperationException(
+          s"${cmd.split("\\s+").mkString(" ").toUpperCase} is not supported on $what")
+      case ShowCreateRe(target) if TableEnv.lookup(target.replace("`", "")).isEmpty &&
+          registryOnly(spark, target.replace("`", "")) =>
+        throw new UnsupportedOperationException(
+          "SHOW CREATE TABLE is only supported for tables, but " +
+            s"'${target.replace("`", "")}' is a view, use SHOW CREATE VIEW instead")
       case ShowCreateRe(target) if TableEnv.lookup(target.replace("`", "")).isDefined =>
         Statement(TableEnv.showCreateTable(TableEnv.lookup(target.replace("`", "")).get))
       case DescribeRe(target) if TableEnv.lookup(target.replace("`", "")).isDefined =>

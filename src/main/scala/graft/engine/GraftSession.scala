@@ -47,12 +47,37 @@ import org.apache.spark.sql.SparkSession
   * SparkContext, so in local mode it is loadable in every gateway session
   * with isolation on or off, and `SHOW JARS` lists every session's jars.
   * Flink scopes `ADD JAR` to its session; this engine does not.
+  *
+  * `configure` also installs [[graft.plans.ParameterizeLiterals]] as a
+  * columnar pre-transition rule, so it sees every final physical plan (AQE
+  * stages, plans without AQE, streaming micro-batches) just before
+  * whole-stage code generation. A notebook client keeps sending statements
+  * that differ only in their constants, and Spark pastes numeric and
+  * temporal literal values (integral, float/double, date, timestamp,
+  * timestamp_ntz, time, ANSI intervals) into the generated Java source,
+  * which is also the key of its compiled-class cache: every new constant
+  * compiled new classes, once on the driver and once more in the task,
+  * whose class loader is part of the key. The rule rewrites those literals
+  * in Filter, Project, HashAggregate and Expand into values read once, per
+  * class instance, from the class's `references` into a primitive field,
+  * as Spark already does for string and decimal literals, so a statement
+  * shape compiles once. Scans and their pushed filters, window frames and
+  * limits keep their literals. `EXPLAIN` prints the same text;
+  * `EXPLAIN CODEGEN` shows `references[...]` reads where the values were.
+  *
+  * `create` caps what Spark's status store keeps for the UI (turned off):
+  * by default it holds up to 1,000 finished SQL executions, jobs and stages,
+  * each execution with its formatted plan, and nothing in the engine reads
+  * them.
   */
 object GraftSession {
 
   def configure(b: SparkSession.Builder): SparkSession.Builder = ForkFreeLocalFs.hadoopConf
     .foldLeft(b) { case (b0, (k, v)) => b0.config(s"spark.hadoop.$k", v) }
-    .withExtensions(_.injectResolutionRule(new CatalogRelations(_)))
+    .withExtensions { e =>
+      e.injectResolutionRule(new CatalogRelations(_))
+      e.injectColumnar(_ => graft.plans.ParameterizeLiterals)
+    }
     .config("spark.sql.artifact.isolation.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
@@ -68,8 +93,16 @@ object GraftSession {
   def create(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession =
     prepare(configure(SparkSession.builder().master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.ui.enabled", "false"))
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.ui.retainedExecutions", RetainedExecutions.toString)
+      .config("spark.ui.retainedJobs", RetainedJobsAndStages.toString)
+      .config("spark.ui.retainedStages", RetainedJobsAndStages.toString))
       .getOrCreate())
+
+  /** How many finished SQL executions, and jobs and stages, Spark's status
+    * store keeps for the (disabled) UI; nothing in the engine reads them. */
+  private[graft] val RetainedExecutions = 20
+  private val RetainedJobsAndStages = 50
 
   /** Per-session setup, the one place it runs: the Flink-dialect functions,
     * the `dsum4` aggregate and the two-phase CUMULATE optimizer rule.

@@ -15,9 +15,9 @@ final class MetaCache[V](
     ttlMillis: Long = 30000,
     clock: () => Long = () => System.currentTimeMillis(),
     maxEntries: Int = 256) {
+  import MetaCache.Entry
 
-  private final case class Entry(at: Long, value: scala.concurrent.Promise[V])
-  private val entries = new ConcurrentHashMap[String, Entry]()
+  private val entries = new ConcurrentHashMap[String, Entry[V]]()
   val hits = new AtomicLong(0)
   val misses = new AtomicLong(0)
 
@@ -73,4 +73,8 @@ final class MetaCache[V](
     entries.keySet().removeIf(_.startsWith(prefix))
 
   def size: Int = entries.size
+}
+
+object MetaCache {
+  private final case class Entry[V](at: Long, value: scala.concurrent.Promise[V])
 }
